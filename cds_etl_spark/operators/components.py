@@ -21,9 +21,9 @@ min-aggregation. Lineage is cut every round (operators/pin.cut_lineage
 — reliable checkpoint() when a checkpoint dir is configured,
 localCheckpoint otherwise) — without it the plan doubles per iteration
 and the driver, not the data, becomes the bottleneck at scale. The
-fixed, reused-every-round edge/node tables are corpus-scale, so they
-persist with lineage intact instead (operators/pin.pin_stage
-"corpus").
+fixed, reused-every-round edge/node tables are corpus-scale and are
+pinned once with operators/pin.pin_stage "corpus", which also cuts
+their lineage (the same cut_lineage mechanism; no via="persist").
 
 At 100 TB: edges from LSH blocking are ≪ corpus size (bands bound the
 candidate set); labels is one row per node *that appears in an edge*,
@@ -55,7 +55,7 @@ def connected_components(
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     sym = sym.filter(F.col("a") != F.col("b")).distinct()
-    # corpus-scale, reused every round: persist keeps the recompute path
+    # corpus-scale, reused every round: pinned once, lineage cut
     sym = pin_stage(sym, "corpus")
 
     labels = cut_lineage(
@@ -134,9 +134,9 @@ def triangle_count(edges: DataFrame, src: str, dst: str) -> DataFrame:
     # Materialize it once, spread across a defaultParallelism-derived
     # partition count so the wedge/closure stages never inherit an
     # AQE-coalesced single partition (guide §2.5). r16: the edge set
-    # is corpus-scale, so the pins keep lineage (operators/pin.py
-    # "corpus": persist, recomputable after executor loss) instead of
-    # localCheckpointing.
+    # is corpus-scale, so the pins are scope "corpus" (operators/pin.py):
+    # cut_lineage — a reliable checkpoint() when a checkpoint dir is
+    # set (durable across executor loss), localCheckpoint otherwise.
     npart = edges.sparkSession.sparkContext.defaultParallelism * 4
     sym = pin_stage(
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -243,7 +243,7 @@ def bfs_levels(
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     if not directed:
         e = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    # corpus-scale, reused every hop: persist keeps the recompute path
+    # corpus-scale, reused every hop: pinned once, lineage cut
     e = pin_stage(e.filter(F.col("a") != F.col("b")).distinct(), "corpus")
 
     visited = cut_lineage(
@@ -293,7 +293,7 @@ def pagerank(
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     if not directed:
         e = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    # corpus-scale, reused every round: persist keeps the recompute path
+    # corpus-scale, reused every round: pinned once, lineage cut
     e = pin_stage(e.filter(F.col("a") != F.col("b")).distinct(), "corpus")
 
     nodes = pin_stage(
@@ -321,6 +321,7 @@ def pagerank(
         )
         ranks = cut_lineage(
             nodes.join(contribs, nodes["node"] == contribs["node2"], "left")
+            # bcast: ONE-ROW global .agg() scalar frame (one row by construction)
             .crossJoin(F.broadcast(dangling))
             .select(
                 "node",
@@ -364,7 +365,7 @@ def weighted_sssp(
     connected_components/pagerank pattern). Relaxation is the scale
     formulation: the oracle's path ENUMERATION is exponential in
     hops, the relaxation is linear."""
-    # corpus-scale, reused every round: persist keeps the recompute path
+    # corpus-scale, reused every round: pinned once, lineage cut
     e = pin_stage(
         edges.select(
             F.col(src).alias("a"),
@@ -419,7 +420,7 @@ def label_propagation(
 
     Returns (node, community)."""
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    # corpus-scale, reused every round: persist keeps the recompute path
+    # corpus-scale, reused every round: pinned once, lineage cut
     e = pin_stage(
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .filter(F.col("a") != F.col("b"))

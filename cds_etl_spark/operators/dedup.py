@@ -571,6 +571,7 @@ def _probe_pairs(
     the persisted-index probe."""
     probe_side = bands_new.alias("n")
     if broadcast_batch:
+        # bcast: BOUNDED flag-gated: caller asserts a small probe BATCH vs big index (broadcast_batch param, default documented)
         probe_side = F.broadcast(probe_side)
     cand = (
         bands_idx.alias("i")
@@ -583,6 +584,7 @@ def _probe_pairs(
     )
     refine_new = sh_new.withColumnRenamed("_id", "new_id").withColumnRenamed("_sh", "_sa")
     if broadcast_batch:
+        # bcast: BOUNDED flag-gated small probe batch (broadcast_batch param)
         refine_new = F.broadcast(refine_new)
     return (
         cand.join(
@@ -1010,6 +1012,7 @@ def semantic_dedup(
         )
     else:
         _sim = cosine_similarity(F.col("_vv"), F.col("cvec"))
+    # bcast: BOUNDED anchor set = n/200 by design - the algorithm capacity parameter; scale path is IVF-partitioned assignment (qs151)
     scored = v.join(F.broadcast(anchors)).select(
         id_col,
         "_vv",

@@ -147,6 +147,7 @@ def zscore_anomalies(
     absent from the baseline flag nothing (inner join + sigma guard):
     an unknown group is a schema event, not a point anomaly."""
     j = batch.join(
+        # bcast: BOUNDED caller contract: baseline is groups-sized
         F.broadcast(baseline),
         batch[group_col] == baseline["grp"],
         "inner",
@@ -211,6 +212,7 @@ def zscore_anomalies_rolling(
             ),
         )
     )
+    # bcast: CALENDAR distinct (group, day) spine - calendar x groups
     b2 = b.join(F.broadcast(days), ["_grp", "_day"])
     # Precondition: every INTERIOR shard has >= n rows. A thin
     # FIRST shard is safe (no rows exist before it, so context

@@ -162,6 +162,7 @@ def stamp_historical_value(
         )
     )
     joined = df.join(
+        # bcast: BOUNDED one row per historical state key; reference ETL state is catalog-scale
         F.broadcast(history), F.col(f"`{key_col}`").cast("string") == F.col("key"), "left"
     )
     return joined.withColumn(

@@ -1223,6 +1223,7 @@ def probe_phash_index(
         "_nid", "_nh", F.explode(_hash_chunks("_nh", n_bands)).alias("b")
     ).select("_nid", "_nh", "b.band", "b.chunk")
     if broadcast_batch:
+        # bcast: BOUNDED flag-gated small probe batch (broadcast_batch param)
         banded_new = F.broadcast(banded_new)
     cand = (
         banded_idx.join(banded_new, ["band", "chunk"])

@@ -13,7 +13,7 @@ onto executor-local block storage, so
   files for executor local disk (guide §5).
 
 ``pin_stage(df, scope)`` picks the mechanism by boundedness class —
-the broadcast-allowlist precedent: every call site declares WHY its
+the broadcast-tag precedent: every call site declares WHY its
 table is safe to pin the way it is pinned.
 
 ``"bounded"``

@@ -1,7 +1,7 @@
 """Distributed prefix sums: ordered running totals WITHOUT the
 single-task global window.
 
-``Window.orderBy(...)`` with no partition moves every row to ONE
+A ``Window.orderBy`` with no partition moves every row to ONE
 task — the classic scale cliff behind midrank tables (qs243/qs271),
 Lorenz curves and any "cumulative X by sorted Y" epilogue: on a
 1000-executor cluster the whole frame still sorts on one core. The
@@ -72,6 +72,7 @@ def _null_safe_equi_join(
     for k in keys:
         c = df[k].eqNullSafe(renamed[f"_nsj_{k}"])
         cond = c if cond is None else (cond & c)
+    # bcast: GRID shared null-safe form of the bounds/offset joins above: per-partition min/max span (one row per part key) or per-bucket offsets (n_buckets rows)
     return df.join(F.broadcast(renamed), cond).drop(
         *[f"_nsj_{k}" for k in keys]
     )
@@ -125,6 +126,7 @@ def bucketed_prefix_sum(
     b = (
         _null_safe_equi_join(df, bounds, pc)
         if pc
+        # bcast: GRID per-partition min/max span, one row per part key
         else df.crossJoin(F.broadcast(bounds))
     )
     # width = range DIV n_buckets + 1: exact integer division (no
@@ -206,6 +208,7 @@ def bucketed_row_number(
     b = (
         _null_safe_equi_join(df, bounds, pc)
         if pc
+        # bcast: GRID per-partition min/max span, one row per part key
         else df.crossJoin(F.broadcast(bounds))
     )
     b = (
@@ -410,6 +413,7 @@ def scalable_ntile_multi(
     # (N mod n) tiles take one extra.
     ranks = (
         tot.crossJoin(
+            # bcast: GRID literal n-1 boundary ranks
             F.broadcast(
                 df.sparkSession.range(1, n).withColumnRenamed(
                     "id", "_i"
@@ -435,6 +439,7 @@ def scalable_ntile_multi(
     bvals = (
         cum.withColumnRenamed("_mname", "_mn2")
         .join(
+            # bcast: GRID n-1 boundary ranks per metric
             F.broadcast(ranks),
             (F.col("_mn2") == F.col("_mname"))
             & (F.col("_cum") >= F.col("_r"))
@@ -459,6 +464,7 @@ def scalable_ntile_multi(
     wv = Window.partitionBy("_mname", "_mval").orderBy("_tb")
     ties = (
         long.join(
+            # bcast: GRID tile boundary values, <= n-1 per metric
             F.broadcast(
                 inner.select(
                     F.col("_mname").alias("_mn3"),
@@ -499,6 +505,7 @@ def scalable_ntile_multi(
                 ).alias(f"_cl_{j}_{i}")
             )
     piv = bounds.groupBy().agg(*aggs)
+    # bcast: GRID single pivoted boundary row
     out = df.crossJoin(F.broadcast(piv))
     drop = []
     for j, (m, out_col) in enumerate(metrics):

@@ -65,4 +65,5 @@ def first_match_lookup(
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
+    # bcast: BOUNDED reference mapping files are curated catalog-scale tables
     return df.join(F.broadcast(first), key, "left")

@@ -44,6 +44,7 @@ def replicate_to(df_single: DataFrame, target: DataFrame) -> DataFrame:
     """Attach the single wide row to every row of `target` (the
     reference replicates the Study row to manifest length). The
     single-row side is broadcast: a map-side expand, no shuffle."""
+    # bcast: ONE-ROW global .agg() scalar frame (one row by construction)
     return target.crossJoin(F.broadcast(df_single))
 
 

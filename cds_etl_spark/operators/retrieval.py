@@ -79,6 +79,7 @@ def decontaminate(
         F.size("shset").alias("n_shingles"),
         F.explode_outer("shset").alias("sh"),
     )
+    # bcast: BOUNDED benchmark probe set - eval-suite sized
     hits = exploded.join(F.broadcast(probe_sh), "sh")
     return (
         hits.groupBy(id_col, "n_shingles")
@@ -130,6 +131,7 @@ def bm25_scores(
     per_term = (
         tf.join(df_t, "tok")
         .join(dl, id_col)
+        # bcast: ONE-ROW global .agg() scalar frame (one row by construction)
         .crossJoin(F.broadcast(stats))
         .withColumn(
             "contrib",

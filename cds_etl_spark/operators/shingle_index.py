@@ -176,6 +176,7 @@ def decontaminate_indexed(
         F.count(F.lit(1)).alias("n_shingles")
     )
     hits = (
+        # bcast: BOUNDED benchmark probe set - eval-suite sized
         grams.join(F.broadcast(probe_h), "h")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_shared"))
@@ -229,6 +230,7 @@ def perplexity_tiers_indexed(
     score = (
         bge.join(cbg, ["w1", "w2"])
         .join(cctx, "w1")
+        # bcast: ONE-ROW global .agg() scalar frame (one row by construction)
         .crossJoin(F.broadcast(v))
         .groupBy("doc_id")
         .agg(
@@ -241,6 +243,7 @@ def perplexity_tiers_indexed(
         )
         .join(lang, "doc_id")
     )
+    # window: REJECT per-lang perplexity tiers: qs157's qs245-shape measured reject (BASELINE r9 task 5)
     w = Window.partitionBy("lang").orderBy(F.col("lp").desc(), "doc_id")
     tiered = score.withColumn("t3", F.ntile(3).over(w))
     tier = F.element_at(

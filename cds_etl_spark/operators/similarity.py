@@ -51,6 +51,7 @@ def cosine_topk(
     (one-row DataFrame with column ``qvec``). The query side is
     broadcast; scoring fuses into the scan stage."""
     return (
+        # bcast: ONE-ROW single query vector row
         df.join(F.broadcast(query_vec))
         .select(
             F.col(id_col),
@@ -103,6 +104,7 @@ def ivf_assign(
             F.col(cvec_col),
             l2_norm(F.col(cvec_col)).alias("_cn"),
         )
+        # bcast: BOUNDED K centroids (model parameter)
         scored = left.join(F.broadcast(right)).select(
             id_col,
             "_v",
@@ -125,6 +127,7 @@ def ivf_assign(
             )
             .withColumn("_vn", l2_norm(F.col("_v")))
             .join(
+                # bcast: BOUNDED K centroids (model parameter; r15 prenorm re-key of the same site)
                 F.broadcast(
                     centroids.select(
                         F.col(cid_col),
@@ -174,6 +177,7 @@ def ivf_topk(
     on disk, so the probe filter is partition pruning — the scan reads
     nprobe/C of the data."""
     probed = (
+        # bcast: ONE-ROW single query vector row
         centroids.join(F.broadcast(query_vec))
         .select(
             F.col(cid_col),
@@ -184,7 +188,9 @@ def ivf_topk(
         .select(cid_col)
     )
     return (
+        # bcast: TOPK nprobe probed centroid ids (.limit)
         assigned.join(F.broadcast(probed), cid_col)
+        # bcast: ONE-ROW single query vector row
         .join(F.broadcast(query_vec))
         .select(
             F.col(id_col),
@@ -392,7 +398,9 @@ def lsh_topk(
     else:
         probes = qb
     return (
+        # bcast: TOPK query bucket + n_bits flips, <= n_bits+1 rows
         assigned.join(F.broadcast(probes), "bucket")
+        # bcast: ONE-ROW single query vector row
         .join(F.broadcast(query_vec))
         .select(
             F.col(id_col),
@@ -458,6 +466,7 @@ def pq_encode(
         )
     else:
         fit = F.round(dot_product(F.col("_sv"), F.col("cwvec")), 6)
+    # bcast: BOUNDED 256 x n_sub codebook (model parameter)
     scored = subs.join(F.broadcast(codebooks), "sub").select(
         id_col,
         "sub",
@@ -496,6 +505,7 @@ def pq_adc_topk(
     side integer" pattern). Returns (id, score_e6) top-k, id tiebreak.
     """
     lut = (
+        # bcast: ONE-ROW single query vector row
         codebooks.join(F.broadcast(query_vec))
         .select(
             "sub",
@@ -512,6 +522,7 @@ def pq_adc_topk(
         )
     )
     return (
+        # bcast: GRID 256 x n_sub ADC lookup table
         codes.join(F.broadcast(lut), ["sub", "code"])
         .groupBy(id_col)
         .agg(F.sum("_e6").alias("score_e6"))
@@ -732,6 +743,7 @@ def ivfpq_build(
         )
     res = (
         assigned.join(
+            # bcast: BOUNDED K centroids (model parameter)
             F.broadcast(centroids.select("cid", "cvec")), "cid"
         )
         .select(
@@ -791,11 +803,13 @@ def ivfpq_topk(
         dot_product(F.col("cvec"), F.col("qvec")) * 1_000_000
     ).cast("long")
     probes = (
+        # bcast: ONE-ROW single query vector row
         centroids.join(F.broadcast(query_vec))
         .select("cid", qd.alias("_c_e6"))
         .orderBy(F.col("_c_e6").desc(), "cid")
         .limit(nprobe)
     )
+    # bcast: ONE-ROW single query vector row
     lut = codebooks.join(F.broadcast(query_vec)).select(
         "sub",
         "code",
@@ -811,8 +825,10 @@ def ivfpq_topk(
         .cast("long")
         .alias("_e6"),
     )
+    # bcast: TOPK nprobe probed centroid ids (.limit)
     cand = codes.join(F.broadcast(probes), "cid")
     return (
+        # bcast: GRID 256 x n_sub ADC lookup table
         cand.join(F.broadcast(lut), ["sub", "code"])
         .groupBy(id_col, "_c_e6")
         .agg(F.sum("_e6").alias("_r_e6"))

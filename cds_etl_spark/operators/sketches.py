@@ -253,6 +253,7 @@ def cms_estimate(
     )
     keyed = probes.select("j", "__item", _bucket(F.col("__item"), F.col("j"), width))
     return (
+        # bcast: GRID depth x width CMS table (fixed sketch params)
         keyed.join(F.broadcast(sketch), ["j", "bucket"], "left")
         .groupBy(F.col("__item").alias(item_col))
         .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).alias("est"))
@@ -371,6 +372,7 @@ def bloom_probe(
             F.col("word").alias(f"_w{j}"), F.col("bits").alias(f"_bits{j}")
         )
         out = out.join(
+            # bcast: BOUNDED bloom filter words, m/64 rows (fixed sketch param)
             F.broadcast(w),
             (F.col(f"_bit{j}") / BLOOM_WORD_BITS).cast("long") == F.col(f"_w{j}"),
             "left",

@@ -79,6 +79,7 @@ def salted_broadcast_join(
     small_rep = small.crossJoin(salts)
     return (
         with_salt(big, buckets, det_col)
+        # bcast: BOUNDED operator contract: caller-asserted small side, replicated x buckets for salting
         .join(F.broadcast(small_rep), [on, SALT], "inner")
         .drop(SALT)
     )

@@ -86,6 +86,7 @@ def cascade_delete(
     a bounded loop of broadcast anti-join stages — one shuffle-free
     pass per DAG level, not a row-at-a-time recursion."""
     tables = dict(tables)
+    # bcast: BOUNDED validation failure-id list; reference ETL tables are catalog-scale
     bad = F.broadcast(
         _materialize(bad_ids.select(F.col(bad_ids.columns[0]).alias("_bad_id")).distinct())
     )
@@ -175,6 +176,7 @@ def id_validation(
             # deleting orphans before their own node's check reports them.
             if not orphan.isEmpty():
                 df = _materialize(
+                    # bcast: BOUNDED orphan-id failure list; reference ETL tables are catalog-scale
                     df.join(F.broadcast(orphan), _bt(id_col) == F.col("_oid"), "left_anti")
                 )
                 tables[node] = df
@@ -219,6 +221,7 @@ def id_validation(
             if not bad.isEmpty():  # same non-empty guard as :271
                 df = _materialize(
                     df.join(
+                        # bcast: BOUNDED duplicate-id failure list; reference ETL tables are catalog-scale
                         F.broadcast(bad.select("_vid")), _bt(id_col) == F.col("_vid"), "left_anti"
                     )
                 )

@@ -175,6 +175,7 @@ class CdsPipelineV10:
         (the _pos window and the repeated per-node matching sweeps
         must see one stable ingest order)."""
         out = with_row_id(normalize_strings(df)).withColumn(
+            # window: GRID positional index of one workbook sheet (xlsx caps a sheet at 1,048,576 rows; module docstring)
             POS, F.row_number().over(Window.orderBy(ROW_ID))
         ).cache()
         self._cached.append(out)

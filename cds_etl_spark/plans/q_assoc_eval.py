@@ -109,6 +109,7 @@ def qs322(spark: SparkSession, sf: str) -> DataFrame:
     r = wk.join(full_, "b").select(
         "t",
         F.row_number()
+        # window: GRID Page trend: week-block x treatment grid
         .over(Window.partitionBy("b").orderBy("x", "t"))
         .alias("rk"),
     )
@@ -184,6 +185,7 @@ def qs323(spark: SparkSession, sf: str) -> DataFrame:
     )
     d = (
         g1.alias("a")
+        # bcast: GRID <=50-row quantity-value distribution (l_quantity domain)
         .crossJoin(F.broadcast(g0.alias("b")))
         .groupBy((F.col("a.v") - F.col("b.v")).alias("d"))
         .agg(F.sum(F.col("a.c") * F.col("b.c")).alias("w"))
@@ -192,6 +194,7 @@ def qs323(spark: SparkSession, sf: str) -> DataFrame:
         "d",
         F.sum("w")
         .over(
+            # window: GRID Hodges-Lehmann: aggregated pairwise-difference value grid
             Window.orderBy("d").rowsBetween(
                 Window.unboundedPreceding, 0
             )
@@ -207,8 +210,8 @@ def qs323(spark: SparkSession, sf: str) -> DataFrame:
     )
     tot = cum.agg(F.max("tw").alias("n_pairs"))
     return (
-        lo.crossJoin(F.broadcast(hi))
-        .crossJoin(F.broadcast(tot))
+        lo.crossJoin(hi)
+        .crossJoin(tot)
         .select(
             (F.col("lo") + F.col("hi")).cast("long").alias("hl2"),
             F.col("n_pairs").cast("long").alias("n_pairs"),
@@ -294,7 +297,7 @@ def qs324(spark: SparkSession, sf: str) -> DataFrame:
         F.when(m % 2 == 1, 2 * m).otherwise(2 * m - 1)
     )
     agg = (
-        r.crossJoin(F.broadcast(n))
+        r.crossJoin(n)
         .select("g", st.alias("st"))
         .agg(
             F.sum(F.when(F.col("g") == 1, F.col("st")))
@@ -504,6 +507,7 @@ def qs327(spark: SparkSession, sf: str) -> DataFrame:
     n = g.agg(F.sum("c").cast("long").alias("n"))
     a, b = g.alias("a"), g.alias("b")
     pairs = (
+        # bcast: GRID bucketed (x,y) contingency grid, <= ~100 cells
         a.crossJoin(F.broadcast(b))
         .agg(
             F.sum(
@@ -543,7 +547,7 @@ def qs327(spark: SparkSession, sf: str) -> DataFrame:
             .cast("long")
             .alias("ty"),
         )
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
     )
     cd = (F.col("conc") - F.col("disc")).cast("double")
     return pairs.select(
@@ -614,6 +618,7 @@ def qs329(spark: SparkSession, sf: str) -> DataFrame:
     tot = g.groupBy("flag").agg(F.sum("c").cast("long").alias("n"))
     a, b = g.alias("a"), g.alias("b")
     p = (
+        # bcast: GRID (flag, quantity) grid <= 3x50 cells
         a.join(F.broadcast(b), F.col("a.flag") == F.col("b.flag"))
         .groupBy(F.col("a.flag").alias("flag"))
         .agg(
@@ -625,6 +630,7 @@ def qs329(spark: SparkSession, sf: str) -> DataFrame:
                 ).cast("decimal(38,0)")
             ).alias("raw")
         )
+        # bcast: GRID per-flag totals, 3 rows
         .join(F.broadcast(tot), "flag")
     )
     return p.select(
@@ -792,6 +798,7 @@ def qs330(spark: SparkSession, sf: str) -> DataFrame:
     )
     nrel = lab.agg(F.sum("rel").cast("long").alias("n_rel_total"))
     top = lab.orderBy(F.col("cents").desc(), "cust").limit(1000)
+    # window: EPILOGUE AP@1000: window over orderBy().limit(1000) survivors
     w = Window.orderBy(F.col("cents").desc(), "cust")
     rk = top.select(
         "rel",
@@ -814,7 +821,7 @@ def qs330(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("ap"),
             F.max("cumrel").cast("long").alias("n_rel_retrieved"),
         )
-        .crossJoin(F.broadcast(nrel))
+        .crossJoin(nrel)
         .select("ap", "n_rel_retrieved", "n_rel_total")
     )
 
@@ -1370,6 +1377,7 @@ def qs335(spark: SparkSession, sf: str) -> DataFrame:
     xy = top.select(
         F.log(
             F.row_number()
+            # window: EPILOGUE Zipf: window over top-100 vocab terms
             .over(Window.orderBy(F.col("f").desc(), "term"))
             .cast("double")
         ).alias("x"),
@@ -1573,7 +1581,7 @@ def qs337(spark: SparkSession, sf: str) -> DataFrame:
     mx = (
         pairs.join(sa, "item_a")
         .join(sb, "item_b")
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
     )
     dab = F.col("s_ab").cast("double")
     dsa = F.col("sa").cast("double")
@@ -1676,6 +1684,7 @@ def qs338(spark: SparkSession, sf: str) -> DataFrame:
         )
         .agg(F.sum(F.col("l_quantity").cast("long")).alias("z"))
     )
+    # window: GRID Croston: per-part week grid
     wg = Window.partitionBy("grp").orderBy("w")
     seq = dem.select(
         "grp",
@@ -1834,6 +1843,7 @@ def qs341(spark: SparkSession, sf: str) -> DataFrame:
     # 24.9 → 34.6 s at sf10. ~250 (lang, lenband) cells is an order
     # more parallelism than qs334's 25-cell layer; the part_cols
     # rewire stays one line away if blocks ever outgrow tasks.
+    # window: REJECT SNM rn: bucketed_row_number rewire measured 24.9->34.6s sf10 (diamond: rn on 2 branches, BASELINE r10); ~250 (lang,lenband) cells
     w = Window.partitionBy("lang", "lenband").orderBy("doc_id")
     # r15 (guide §2.5): AQE coalesced the tiny (lang, lenband) window
     # exchanges to ONE partition, so the 48·N pair expansion and every
@@ -2132,6 +2142,7 @@ def qs328(spark: SparkSession, sf: str) -> DataFrame:
         "b",
         "t",
         F.row_number()
+        # window: GRID Quade: block x treatment grid
         .over(Window.partitionBy("b").orderBy("x", "t"))
         .alias("rk"),
     )
@@ -2140,15 +2151,17 @@ def qs328(spark: SparkSession, sf: str) -> DataFrame:
     )
     q = blk.select(
         "b",
+        # window: GRID Quade: block-range grid
         F.row_number().over(Window.orderBy("rng", "b")).alias("qb"),
     )
+    # bcast: CALENDAR per-block ranks; blocks are calendar-bounded
     s = r.join(F.broadcast(q), "b").select(
         "t", (F.col("qb") * (2 * F.col("rk") - 6)).alias("s2")
     )
     agg = s.agg(
         F.sum(F.col("s2") * F.col("s2")).cast("long").alias("a2")
     ).crossJoin(
-        F.broadcast(q.agg(F.count(F.lit(1)).cast("long").alias("nb")))
+        q.agg(F.count(F.lit(1)).cast("long").alias("nb"))
     )
     tj = (
         s.groupBy("t")
@@ -2157,7 +2170,7 @@ def qs328(spark: SparkSession, sf: str) -> DataFrame:
             F.sum(F.col("sj") * F.col("sj")).cast("long").alias("b2n")
         )
     )
-    return agg.crossJoin(F.broadcast(tj)).select(
+    return agg.crossJoin(tj).select(
         "a2",
         "b2n",
         "nb",
@@ -2244,7 +2257,7 @@ def qs339(spark: SparkSession, sf: str) -> DataFrame:
     r = bucketed_row_number(s, "v", ["v", "o_orderkey"], "rk")
     n_ = s.agg(F.count(F.lit(1)).cast("long").alias("n"))
     agg = (
-        r.crossJoin(F.broadcast(n_))
+        r.crossJoin(n_)
         .agg(
             F.sum(F.when(F.col("g") == 1, 1).otherwise(0))
             .cast("long")
@@ -2381,6 +2394,7 @@ def qs343(spark: SparkSession, sf: str) -> DataFrame:
     gp = bucketed_prefix_sum(g, "v", "cnt", "cum_lo", part_cols=("prio",))
     tn = s96.groupBy("prio").agg(F.count(F.lit(1)).alias("tn"))
     var = (
+        # bcast: GRID per-priority totals, 5 rows
         gp.join(F.broadcast(tn), "prio")
         .groupBy("prio")
         .agg(
@@ -2397,6 +2411,7 @@ def qs343(spark: SparkSession, sf: str) -> DataFrame:
         F.col("o_orderpriority").alias("prio"), cents.alias("v")
     )
     cm = (
+        # bcast: GRID per-priority VaR table, 5 rows
         oos.join(F.broadcast(var), "prio")
         .groupBy("prio", "var95")
         .agg(
@@ -2547,7 +2562,7 @@ def qs345(spark: SparkSession, sf: str) -> DataFrame:
     win = spark.range(1).select(
         F.explode(F.array(*[F.lit(x) for x in (50, 100, 200, 400)])).alias("w")
     )
-    blk = daily.crossJoin(F.broadcast(win)).select(
+    blk = daily.crossJoin(win).select(
         "w", F.expr("t DIV w").alias("b"), "t", "y"
     )
     full_ = (
@@ -2685,7 +2700,7 @@ def qs350(spark: SparkSession, sf: str) -> DataFrame:
         F.sum("c").cast("double").alias("tc"),
         F.count(F.lit(1)).cast("long").alias("n"),
     )
-    j = g.crossJoin(F.broadcast(tot))
+    j = g.crossJoin(tot)
     share = F.col("c") / F.col("tc")
     lt = F.log(F.col("c") * F.col("n") / F.col("tc"))
     return j.groupBy("n").agg(
@@ -2763,6 +2778,7 @@ def qs346(spark: SparkSession, sf: str) -> DataFrame:
         F.max("x").alias("xn"),
     )
     nb = (
+        # bcast: GRID per-segment extremes, 5 rows
         daily.join(F.broadcast(ex), "seg")
         .groupBy("seg")
         .agg(
@@ -2865,6 +2881,7 @@ def qs347(spark: SparkSession, sf: str) -> DataFrame:
         .alias("wo")
     )
     den = (
+        # bcast: GRID rating contingency grid, <= 5x5
         rm.crossJoin(F.broadcast(cm))
         .agg(
             F.sum(
@@ -2878,8 +2895,8 @@ def qs347(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     return (
-        n.crossJoin(F.broadcast(num))
-        .crossJoin(F.broadcast(den))
+        n.crossJoin(num)
+        .crossJoin(den)
         .select(
             F.col("n").alias("n_orders"),
             F.round(
@@ -2970,6 +2987,7 @@ def qs348(spark: SparkSession, sf: str) -> DataFrame:
         F.sum("c").cast("long").alias("n"),
         F.count(F.lit(1)).cast("long").alias("k"),
     )
+    # bcast: GRID per-profiled-column totals, schema-width rows
     j = g.join(F.broadcast(t), "col")
     share = F.col("c").cast("double") / F.col("n")
     ent = -F.sum(share * F.log(share))
@@ -3058,6 +3076,7 @@ def qs349(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("x")
         )
     )
+    # window: GRID Page-Hinkley: ~730-row calendar grid
     wd = Window.orderBy("d")
     cum = daily.select(
         "d",
@@ -3068,6 +3087,7 @@ def qs349(spark: SparkSession, sf: str) -> DataFrame:
         .cast("long")
         .alias("sx"),
     )
+    # window: GRID Page-Hinkley: calendar grid cumulative
     wt = Window.orderBy("t").rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -3088,11 +3108,11 @@ def qs349(spark: SparkSession, sf: str) -> DataFrame:
     )
     mx = m.agg(F.max("mt").alias("mmax"))
     amax = (
-        m.crossJoin(F.broadcast(mx))
+        m.crossJoin(mx)
         .filter(F.col("mt") == F.col("mmax"))
         .agg(F.min("d").alias("peak_day"))
     )
-    return ph.crossJoin(F.broadcast(amax)).select(
+    return ph.crossJoin(amax).select(
         "n_days",
         F.round("ph_range", 4).alias("ph_range"),
         "peak_day",

@@ -313,6 +313,7 @@ def qs183(spark: SparkSession, sf: str) -> DataFrame:
     )
     gp = bucketed_prefix_sum(g, "c", "q", "cq", part_cols=("flag",))
     tn = b.groupBy("flag").agg(F.sum("q").alias("tq"))
+    # bcast: GRID per-flag quantity totals, 3 rows
     w = gp.join(F.broadcast(tn), "flag")
     return w.groupBy(F.col("flag").alias("l_returnflag")).agg(
         F.min(
@@ -579,7 +580,7 @@ def qs187(spark: SparkSession, sf: str) -> DataFrame:
     lift = (
         pairs.join(sa, "item_a")
         .join(sb, "item_b")
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .select(
             "item_a",
             "item_b",
@@ -1229,8 +1230,8 @@ def qs197(spark: SparkSession, sf: str) -> DataFrame:
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
     rev = (
         o.join(cu, o["o_custkey"] == cu["c_custkey"])
-        .join(F.broadcast(n), cu["c_nationkey"] == n["n_nationkey"])
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
+        .join(n, cu["c_nationkey"] == n["n_nationkey"])
+        .join(r, n["n_regionkey"] == r["r_regionkey"])
         .groupBy(
             F.col("r_name").alias("region"),
             F.col("n_name").alias("nation"),
@@ -1303,6 +1304,7 @@ def qs198(spark: SparkSession, sf: str) -> DataFrame:
         "y",
         F.row_number()
         .over(
+            # window: GRID rank movers: 200-group aggregate per year
             Window.partitionBy("y").orderBy(
                 F.col("c").desc(), "pgrp"
             )
@@ -1550,6 +1552,7 @@ def qs201(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("c")
         )
     )
+    # bcast: GRID custkey%20 group list, 20 rows
     grid = spine.crossJoin(F.broadcast(grps)).join(
         daily, ["d", "grp"], "left"
     )
@@ -1558,6 +1561,7 @@ def qs201(spark: SparkSession, sf: str) -> DataFrame:
         "grp",
         F.coalesce("c", F.lit(0)).cast("long").alias("day_cents"),
         F.sum(F.coalesce("c", F.lit(0)))
+        # window: GRID date-spine fill: day grid per group
         .over(Window.partitionBy("grp").orderBy("d"))
         .cast("long")
         .alias("cum_cents"),
@@ -1790,6 +1794,7 @@ def qs204(spark: SparkSession, sf: str) -> DataFrame:
             " div 10000"
         ).alias("y")
     )
+    # window: GRID autocorrelation: 10x36 month grid
     w = Window.partitionBy("grp").orderBy("t")
     lagged = m.select(
         "grp",
@@ -2113,7 +2118,7 @@ def qs296(spark: SparkSession, sf: str) -> DataFrame:
     tau = 21
     entry = ev.agg(F.min(F.col("ts").cast("date")).alias("e"))
     deaths = (
-        ev.crossJoin(F.broadcast(entry))
+        ev.crossJoin(entry)
         .groupBy("user_id")
         .agg(
             F.datediff(
@@ -2175,8 +2180,8 @@ def qs296(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.max_by("s", "t").alias("s_tau"))
     )
     return (
-        seg.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(stau))
+        seg.crossJoin(tot)
+        .crossJoin(stau)
         .select(
             F.lit(tau).cast("long").alias("tau_days"),
             "n_users",

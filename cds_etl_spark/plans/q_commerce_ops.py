@@ -327,7 +327,7 @@ def qs283(spark: SparkSession, sf: str) -> DataFrame:
         F.sum("c").alias("n"),
         F.sum(F.col("g") * F.col("c")).alias("s"),
     )
-    probes = cum.crossJoin(F.broadcast(n))
+    probes = cum.crossJoin(n)
     qcol = lambda rank, name: F.min(  # noqa: E731
         F.when(F.col("cum") >= rank, F.col("g"))
     ).alias(name)
@@ -337,7 +337,7 @@ def qs283(spark: SparkSession, sf: str) -> DataFrame:
         qcol(F.expr("(3 * n + 3) DIV 4"), "q3_days"),
         qcol(F.expr("(9 * n + 9) DIV 10"), "p90_days"),
     )
-    return n.crossJoin(F.broadcast(qs)).select(
+    return n.crossJoin(qs).select(
         F.col("n").cast("long").alias("n_gaps"),
         F.round(F.col("s").cast("double") / F.col("n"), 2).alias(
             "mean_days"
@@ -428,7 +428,7 @@ def qs284(spark: SparkSession, sf: str) -> DataFrame:
             / lam_
         ).alias("dispersion"),
     )
-    withl = ob.crossJoin(F.broadcast(lam))
+    withl = ob.crossJoin(lam)
     expected = (
         F.col("n")
         * F.exp(-F.col("lambda"))
@@ -441,7 +441,7 @@ def qs284(spark: SparkSession, sf: str) -> DataFrame:
         ).alias("chi2"),
         F.count(F.lit(1)).alias("bins"),
     )
-    return lam.crossJoin(F.broadcast(chi)).select(
+    return lam.crossJoin(chi).select(
         F.col("n").cast("long").alias("n_orders"),
         F.round("lambda", 4).alias("lambda"),
         F.round("dispersion", 4).alias("dispersion_index"),
@@ -592,6 +592,7 @@ def qs287(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     ix = (
+        # bcast: GRID partkey%100 base-period index, 100 rows
         p.join(F.broadcast(base), "grp")
         .groupBy("t")
         .agg(
@@ -687,7 +688,7 @@ def qs307(spark: SparkSession, sf: str) -> DataFrame:
         F.col("n_name").alias("nation"),
     )
     return (
-        g.join(F.broadcast(nat), "c_nationkey")
+        g.join(nat, "c_nationkey")
         .select(
             "nation",
             F.col("n").cast("long").alias("n_customers"),

@@ -211,7 +211,7 @@ def qs129(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.sum(cents).alias("tot"), F.count(F.lit(1)).alias("n"))
     )
     return (
-        c.crossJoin(F.broadcast(stats))
+        c.crossJoin(stats)
         .filter(cents * F.col("n") > F.col("tot"))
         .join(
             o.filter(F.col("o_totalprice") > 400000).select("o_custkey"),
@@ -263,7 +263,7 @@ def qs130(spark: SparkSession, sf: str) -> DataFrame:
     )
     mx = rev.agg(F.max("total_c").alias("m"))
     return (
-        rev.crossJoin(F.broadcast(mx))
+        rev.crossJoin(mx)
         .filter(F.col("total_c") == F.col("m"))
         .join(s, F.col("s_suppkey") == F.col("l_suppkey"))
         .select("s_suppkey", "s_name", "total_c")
@@ -408,7 +408,7 @@ def qs133(spark: SparkSession, sf: str) -> DataFrame:
         F.sum("value_c").alias("t"), F.count(F.lit(1)).alias("nparts")
     )
     return (
-        pv.crossJoin(F.broadcast(tot))
+        pv.crossJoin(tot)
         .filter(F.col("value_c") * F.col("nparts") * 10 > F.col("t") * 11)
         .select(F.col("l_partkey").alias("p_partkey"), "value_c")
     )
@@ -441,7 +441,7 @@ def qs134(spark: SparkSession, sf: str) -> DataFrame:
         F.sum("cnt").alias("total"), F.count(F.lit(1)).alias("n_groups")
     )
     return (
-        g.crossJoin(F.broadcast(tot))
+        g.crossJoin(tot)
         .select(
             "lang",
             "source",
@@ -662,13 +662,13 @@ def qs137(spark: SparkSession, sf: str) -> DataFrame:
     sketch = cms_build(tok_counts, "tok", weight_col="cnt")
     candidates = (
         cms_estimate(sketch, tok_counts, "tok")
-        .crossJoin(F.broadcast(total))
+        .crossJoin(total)
         .filter(F.col("est") * 1000 >= F.col("n"))
         .select("tok")
     )
     return (
-        tok_counts.join(F.broadcast(candidates), "tok", "left_semi")
-        .crossJoin(F.broadcast(total))
+        tok_counts.join(candidates, "tok", "left_semi")
+        .crossJoin(total)
         .filter(F.col("cnt") * 1000 >= F.col("n"))
         .select("tok", "cnt")
     )
@@ -802,13 +802,13 @@ def qs140(spark: SparkSession, sf: str) -> DataFrame:
     return (
         li.join(o, F.col("o_orderkey") == F.col("l_orderkey"))
         .join(c, F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(cn), F.col("cn.n_nationkey") == F.col("c_nationkey"))
+        .join(cn, F.col("cn.n_nationkey") == F.col("c_nationkey"))
         .join(
-            F.broadcast(r.filter(F.col("r_name") == "ASIA")),
+            r.filter(F.col("r_name") == "ASIA"),
             F.col("r_regionkey") == F.col("cn.n_regionkey"),
         )
         .join(s, F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(F.broadcast(sn), F.col("sn.n_nationkey") == F.col("s_nationkey"))
+        .join(sn, F.col("sn.n_nationkey") == F.col("s_nationkey"))
         .groupBy(F.year("o_orderdate").cast("long").alias("o_year"))
         .agg(
             F.sum(
@@ -1108,7 +1108,7 @@ def qs144(spark: SparkSession, sf: str) -> DataFrame:
     )
     lr = (
         raw_b.join(tgt_b, "b", "left")
-        .crossJoin(F.broadcast(totals))
+        .crossJoin(totals)
         .select(
             "b",
             F.round(
@@ -1130,6 +1130,7 @@ def qs144(spark: SparkSession, sf: str) -> DataFrame:
     )
     doc_b = t.groupBy("doc_id", "b").agg(F.count(F.lit(1)).alias("k"))
     return (
+        # bcast: GRID md5%256 bucket likelihood table, 256 rows
         doc_b.join(F.broadcast(lr), "b")
         .groupBy("doc_id")
         .agg(
@@ -1241,7 +1242,7 @@ def qs146(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     anchors = (
-        emb.join(F.broadcast(n_anchor))
+        emb.join(n_anchor)
         .filter(F.col("vec_id") < F.col("n_anchor"))
         .select(
             F.col("vec_id").alias("cid"),
@@ -1730,11 +1731,12 @@ def qs155(spark: SparkSession, sf: str) -> DataFrame:
     support = (
         exploded.groupBy("tok")
         .agg(F.countDistinct("doc_id").alias("_d"))
-        .join(F.broadcast(total))
+        .join(total)
         .filter(F.col("_d") >= F.col("_floor"))
         .select("tok")
     )
     freq = (
+        # bcast: BOUNDED <= 20 x avg distinct tokens/doc by pigeonhole (df >= D/20)
         exploded.join(F.broadcast(support), "tok", "left_semi")
         .groupBy("doc_id")
         .agg(F.array_sort(F.collect_list("tok")).alias("fts"))
@@ -1812,6 +1814,7 @@ def qs156(spark: SparkSession, sf: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     dev = cut_lineage(  # pin: corpus-scale (row per order)
+        # bcast: GRID per-status medians, 3 rows
         c.join(F.broadcast(med), "st").select(
             "st", F.abs(F.col("cents") - F.col("med")).alias("d")
         )
@@ -1821,7 +1824,9 @@ def qs156(spark: SparkSession, sf: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
     )
     return (
+        # bcast: GRID per-orderstatus MADs, 3 rows
         dev.join(F.broadcast(mad), "st")
+        # bcast: GRID per-orderstatus medians, 3 rows
         .join(F.broadcast(med), "st")
         .groupBy("st")
         .agg(

@@ -455,7 +455,7 @@ def qs293(spark: SparkSession, sf: str) -> DataFrame:
     )
     return (
         npairs.join(ndocs, "threshold", "left")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "threshold",
             F.col("n_pairs").cast("long").alias("n_pairs"),

@@ -89,6 +89,7 @@ def qs351(spark: SparkSession, sf: str) -> DataFrame:
     med = x.groupBy("seg").agg(
         (2 * F.percentile("c", F.lit(0.5))).cast("long").alias("m2")
     )
+    # bcast: GRID per-segment doubled-median, 5 rows
     z = x.join(F.broadcast(med), "seg").select(
         "seg", F.abs(2 * F.col("c") - F.col("m2")).alias("z2")
     )
@@ -104,7 +105,7 @@ def qs351(spark: SparkSession, sf: str) -> DataFrame:
     )
     zm = F.col("s1").cast("double") / F.col("n")
     return (
-        g.crossJoin(F.broadcast(tot))
+        g.crossJoin(tot)
         .groupBy("nn", "k")
         .agg(
             F.round(
@@ -283,6 +284,7 @@ def qs353(spark: SparkSession, sf: str) -> DataFrame:
     daily = o.groupBy(
         F.col("o_orderdate").cast("date").alias("d")
     ).agg(F.count(F.lit(1)).alias("c"))
+    # window: GRID turning points: lag/lead on the ~2,400-row day grid (post-agg)
     w = Window.orderBy("d")
     lagged = daily.select(
         "c",
@@ -388,8 +390,8 @@ def qs354(spark: SparkSession, sf: str) -> DataFrame:
     yc = F.col("y") - F.col("ybar")
     ang = 2 * math.pi * F.col("t") / F.col("period")
     comp = (
-        daily.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(per))
+        daily.crossJoin(tot)
+        .crossJoin(per)
         .groupBy("period", "n")
         .agg(
             F.sum(yc * F.cos(ang)).alias("cs"),
@@ -467,6 +469,7 @@ def qs355(spark: SparkSession, sf: str) -> DataFrame:
         .cast("long")
         .alias("y")
     )
+    # window: GRID variance ratio: log-return lag on the day grid
     w = Window.orderBy("d")
     r = (
         daily.select(
@@ -477,6 +480,7 @@ def qs355(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("lp").isNotNull())
         .select((F.col("ly") - F.col("lp")).alias("r"), "i")
     )
+    # window: GRID variance ratio: rolling-5 sum on the day grid
     w5 = Window.orderBy("i").rowsBetween(-4, 0)
     s = r.select(
         F.sum("r").over(w5).alias("sq"),
@@ -671,7 +675,7 @@ def qs357(spark: SparkSession, sf: str) -> DataFrame:
         + F.abs(d[0] + d[1] + d[2] + d[3])
     ) / 4.0
     return (
-        cls.crossJoin(F.broadcast(tot))
+        cls.crossJoin(tot)
         .select(e.alias("e"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_classes"),
@@ -779,7 +783,7 @@ def qs358(spark: SparkSession, sf: str) -> DataFrame:
         ),
     )
     e = F.col("y") - F.col("a") - F.col("b") * F.col("t")
-    u = daily.crossJoin(F.broadcast(fit)).select(
+    u = daily.crossJoin(fit).select(
         "t", (e * e).alias("u"), "n", "st", "stt"
     )
     num = (
@@ -1288,6 +1292,7 @@ def qs363(spark: SparkSession, sf: str) -> DataFrame:
     dense = spine.join(daily, "d", "left").select(
         "d", F.coalesce(F.col("y"), F.lit(0)).cast("long").alias("y")
     )
+    # window: GRID seasonal strength: centered 7-day MA on the dense calendar grid
     w7 = Window.orderBy("d").rowsBetween(-3, 3)
     tr = dense.select(
         "d",
@@ -1302,6 +1307,7 @@ def qs363(spark: SparkSession, sf: str) -> DataFrame:
         (F.col("y") - F.col("trend")).alias("dt"),
     )
     sea = det.groupBy("dow").agg(F.avg("dt").alias("s"))
+    # bcast: GRID day-of-week seasonal means, 7 rows
     r = det.join(F.broadcast(sea), "dow").select(
         "dt", (F.col("dt") - F.col("s")).alias("r")
     )
@@ -1396,6 +1402,7 @@ def qs364(spark: SparkSession, sf: str) -> DataFrame:
     )
     inc = F.col("x") * F.lit(la) + (F.col("n") - F.col("x")) * F.lit(lb)
     cum = daily.select(
+        # window: GRID SPRT: running LLR on the <=365-row day grid (post-agg)
         "dd", F.sum(inc).over(Window.orderBy("dd")).alias("llr")
     )
     agg = daily.agg(
@@ -1523,7 +1530,7 @@ def qs365(spark: SparkSession, sf: str) -> DataFrame:
         big.filter(F.col("c12") >= 5)
         .join(u1, "w1")
         .join(u2, "w2")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select("w1", "w2", "c12", pmi.alias("pmi"))
         .orderBy(F.col("pmi").desc(), "w1", "w2")
         .limit(20)
@@ -1628,7 +1635,7 @@ def qs366(spark: SparkSession, sf: str) -> DataFrame:
     aggs.append(F.count(F.lit(1)).cast("long").alias("t4"))
     aggs.append(F.countDistinct("bg").cast("long").alias("v4"))
     aggs.append(F.max("nd").alias("nd"))
-    cp = bge.crossJoin(F.broadcast(nn)).agg(*aggs)
+    cp = bge.crossJoin(nn).agg(*aggs)
     lx = [F.log(F.col(f"t{k}").cast("double")) for k in (1, 2, 3, 4)]
     ly = [F.log(F.col(f"v{k}").cast("double")) for k in (1, 2, 3, 4)]
     sx = lx[0] + lx[1] + lx[2] + lx[3]
@@ -1698,6 +1705,7 @@ def qs367(spark: SparkSession, sf: str) -> DataFrame:
         .cast("long")
         .alias("y")
     )
+    # window: GRID Cox-Stuart: row_number + global count on the ~2,400-row day grid (post-agg)
     w = Window.orderBy("d")
     idx = daily.select(
         "y",
@@ -1791,9 +1799,11 @@ def qs368(spark: SparkSession, sf: str) -> DataFrame:
     )
     rk = daily.select(
         "d",
+        # window: GRID Bartels: permutation rank on the day grid
         F.row_number().over(Window.orderBy("y", "d")).cast("long").alias("r"),
     )
     seq = rk.select(
+        # window: GRID Bartels: rank lead on the day grid
         "r", F.lead("r").over(Window.orderBy("d")).alias("nr")
     )
     m = seq.agg(
@@ -1924,7 +1934,7 @@ def qs370(spark: SparkSession, sf: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n"),
     )
     return (
-        g.crossJoin(F.broadcast(tot))
+        g.crossJoin(tot)
         .groupBy("n")
         .agg(
             F.round(
@@ -2069,7 +2079,8 @@ def qs372(spark: SparkSession, sf: str) -> DataFrame:
     )
     dense = (
         srcs.crossJoin(vocab)
-        .crossJoin(F.broadcast(vn))
+        .crossJoin(vn)
+        # bcast: GRID per-source token totals, one row per source label
         .join(F.broadcast(totals), "source")
         .join(cnt, ["source", "w"], "left")
         .select(
@@ -2385,6 +2396,7 @@ def qs376(spark: SparkSession, sf: str) -> DataFrame:
         F.sum("pos").cast("long").alias("p"),
         F.sum(1 - F.col("pos")).cast("long").alias("q"),
     )
+    # window: GRID Youden: suffix cumulatives on the 20-row band grid
     wdesc = Window.orderBy(F.col("band").desc()).rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -2504,10 +2516,12 @@ def qs377(spark: SparkSession, sf: str) -> DataFrame:
     rk = daily.select(
         "seg",
         F.row_number()
+        # window: GRID CvM: combined rank on the ~4,800-row (seg, day) grid (post-agg)
         .over(Window.orderBy("y", "seg", "d"))
         .cast("long")
         .alias("r"),
         F.row_number()
+        # window: GRID CvM: per-sample rank on the same day grid
         .over(Window.partitionBy("seg").orderBy("y", "seg", "d"))
         .cast("long")
         .alias("i"),
@@ -2611,6 +2625,7 @@ def qs378(spark: SparkSession, sf: str) -> DataFrame:
     )
     tw = (
         g.select((F.col("grp") % 5).alias("r"), "c")
+        # bcast: GRID grp%5 regional aggregate, 5 rows
         .join(F.broadcast(reg), "r")
         .groupBy("r")
         .agg(
@@ -2621,7 +2636,7 @@ def qs378(spark: SparkSession, sf: str) -> DataFrame:
             F.max("cr").alias("cr"),
         )
     )
-    parts = tw.crossJoin(F.broadcast(tot)).agg(
+    parts = tw.crossJoin(tot).agg(
         F.sum((F.col("cr") / F.col("tc")) * F.col("tr")).alias("t_within"),
         F.sum(
             (F.col("cr") / F.col("tc"))
@@ -2629,7 +2644,7 @@ def qs378(spark: SparkSession, sf: str) -> DataFrame:
         ).alias("t_between"),
         F.max("ng").alias("ng"),
     )
-    ttot = g.crossJoin(F.broadcast(tot)).agg(
+    ttot = g.crossJoin(tot).agg(
         F.sum(
             (F.col("c") / F.col("tc"))
             * F.log(F.col("c") * F.col("ng") / F.col("tc"))
@@ -2699,6 +2714,7 @@ def qs379(spark: SparkSession, sf: str) -> DataFrame:
         .alias("c")
     )
     d = g.select(
+        # window: GRID quintile shares: ntile over the fixed 200-row group grid
         "c", F.ntile(10).over(Window.orderBy("c", "grp")).alias("dec")
     )
     sh = d.agg(
@@ -2970,6 +2986,7 @@ def qs382(spark: SparkSession, sf: str) -> DataFrame:
     rk = d.select(
         "d",
         F.row_number()
+        # window: GRID Wilcoxon: |d| rank over the 100-row pair grid
         .over(Window.orderBy(F.abs(F.col("d")), F.col("grp")))
         .cast("long")
         .alias("r"),

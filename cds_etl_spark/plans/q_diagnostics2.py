@@ -7,8 +7,8 @@ tables, exact-integer moments feeding one fixed double epilogue.
 House conventions (registry module docstring): identical aliases both
 sides, ROUND on double outputs, integer cents for money, no
 corpus-proportional broadcast hints (r12 audit rule), windows only
-over grid-sized frames (day/month/value grids — classified in
-tests/golden/window_sites.txt).
+over grid-sized frames (day/month/value grids — each tagged
+``# window: GRID`` at its site, gated by tests/test_site_tags.py).
 
 Reference parity: none of these exist in cds-etl (its analytics stop
 at per-table validation counts, cds_validation_functions.py); they
@@ -88,6 +88,7 @@ def _conc_disc(cells: DataFrame) -> DataFrame:
     self-join is a ≤15×15 grid epilogue."""
     dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
     a, b = cells.alias("a"), cells.alias("b")
+    # bcast: GRID <=15-cell priority x status contingency grid self-join
     pair = a.crossJoin(F.broadcast(b)).agg(
         F.sum(
             F.when(
@@ -118,9 +119,9 @@ def _conc_disc(cells: DataFrame) -> DataFrame:
         .agg(F.sum(dec("r") * F.col("r")).alias("ty2"))
     )
     return (
-        pair.crossJoin(F.broadcast(marg))
-        .crossJoin(F.broadcast(mx))
-        .crossJoin(F.broadcast(my))
+        pair.crossJoin(marg)
+        .crossJoin(mx)
+        .crossJoin(my)
     )
 
 
@@ -488,6 +489,7 @@ def qs387(spark: SparkSession, sf: str) -> DataFrame:
     key-shuffle join + grouped scan → day grid, one GRID rank
     window, one-row epilogue."""
     daily = _daily_two_segments(spark, sf)
+    # window: GRID pooled rank over the two-segment day grid (~4800 rows at any SF - calendar x 2)
     w = Window.orderBy("y", "seg", "d")
     r = daily.select(
         "seg",
@@ -566,6 +568,7 @@ def qs388(spark: SparkSession, sf: str) -> DataFrame:
     are one double tree, ROUND 4. Plan: day grid → one GRID lag
     window → one-row epilogue."""
     daily = _daily_two_segments(spark, sf)
+    # window: GRID pooled run-lag over the same two-segment day grid
     w = Window.orderBy("y", "seg", "d")
     s = daily.select("seg", F.lag("seg").over(w).alias("pseg"))
     m = s.agg(
@@ -793,13 +796,14 @@ def qs390(spark: SparkSession, sf: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("y").cast("decimal(38,0)").alias("sy"),
     )
-    z = m.crossJoin(F.broadcast(s)).select(
+    z = m.crossJoin(s).select(
         "t",
         "n",
         (F.col("n").cast("decimal(38,0)") * F.col("y") - F.col("sy")).alias(
             "z"
         ),
     )
+    # window: GRID 84-row month grid cumsum/lags
     w = Window.orderBy("t")
     cs = z.select(
         "n",
@@ -901,6 +905,7 @@ def qs391(spark: SparkSession, sf: str) -> DataFrame:
         F.sum("c1").cast("long").alias("n1"),
         F.sum("c2").cast("long").alias("n2"),
     )
+    # window: GRID distinct daily-value grid (<= day-grid rows) CDF cumsum
     w = Window.orderBy("y")
     cum = v.select(
         "y",
@@ -913,7 +918,7 @@ def qs391(spark: SparkSession, sf: str) -> DataFrame:
         F.lead("y").over(w).alias("ny"),
     )
     dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    num = cum.crossJoin(F.broadcast(n)).agg(
+    num = cum.crossJoin(n).agg(
         F.sum(
             F.when(F.col("ny").isNull(), F.lit(0).cast("decimal(38,0)"))
             .otherwise(
@@ -996,7 +1001,7 @@ def qs392(spark: SparkSession, sf: str) -> DataFrame:
     below = (
         F.col("v").cast("decimal(38,0)") * F.col("n") < F.col("sv")
     )
-    parts = x.crossJoin(F.broadcast(tot)).agg(
+    parts = x.crossJoin(tot).agg(
         F.max("n").alias("n"),
         F.max("sv").alias("sv"),
         F.sum(F.when(below, 1).otherwise(0)).cast("long").alias("m"),

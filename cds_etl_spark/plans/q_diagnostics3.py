@@ -8,7 +8,8 @@ docstring.
 House conventions (registry module docstring): identical aliases both
 sides, integer-exact ranking metrics, no corpus-proportional broadcast
 hints (r12 audit rule), windows only over per-query frames (high-card
-partition keys — see tools/window_audit.py).
+partition keys — each window-cliff site tagged ``# window:`` at the
+site, gated by tests/test_site_tags.py).
 
 Reference parity: none of these exist in cds-etl (its analytics stop at
 per-table validation counts, cds_validation_functions.py); they extend
@@ -275,7 +276,7 @@ def _seg_daily_ranks(spark: SparkSession, sf: str) -> DataFrame:
     """(seg, r = pooled rank, i = within-sample rank) over the
     BUILDING/MACHINERY daily-revenue day grid — unique permutation
     ranks with the qs377 (y, seg, d) tiebreak; both windows are
-    day-grid-sized (GRID class, tests/golden/window_sites.txt)."""
+    day-grid-sized (tagged ``# window: GRID`` at each site)."""
     c = load_table(spark, sf, "customer")
     o = load_table(spark, sf, "orders")
     daily = (
@@ -306,10 +307,12 @@ def _seg_daily_ranks(spark: SparkSession, sf: str) -> DataFrame:
     return daily.select(
         "seg",
         F.row_number()
+        # window: GRID qs377-convention pooled permutation rank over the two-segment day grid (qs395/qs396/qs397)
         .over(Window.orderBy("y", "seg", "d"))
         .cast("long")
         .alias("r"),
         F.row_number()
+        # window: GRID within-segment rank over the day grid (2 segments x ~2.4k days)
         .over(Window.partitionBy("seg").orderBy("y", "seg", "d"))
         .cast("long")
         .alias("i"),
@@ -391,6 +394,7 @@ def qs394(spark: SparkSession, sf: str) -> DataFrame:
         F.sum(F.when(F.col("grp") == 0, 1).otherwise(0)).alias("c0"),
         F.sum(F.when(F.col("grp") == 1, 1).otherwise(0)).alias("c1"),
     )
+    # window: REJECT Kuiper value-grid cumulative: qs227's measured reject (2.0->3.5s r6) covers the identical grid shape
     wc = Window.orderBy("v").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -398,7 +402,7 @@ def qs394(spark: SparkSession, sf: str) -> DataFrame:
         F.sum("c0").over(wc).alias("f0"),
         F.sum("c1").over(wc).alias("f1"),
     )
-    m = cum.crossJoin(F.broadcast(n)).agg(
+    m = cum.crossJoin(n).agg(
         F.max("n0").alias("n0"),
         F.max("n1").alias("n1"),
         F.greatest(
@@ -475,6 +479,7 @@ def qs395(spark: SparkSession, sf: str) -> DataFrame:
     Plan: one join-grouped scan → day grid, one grid rank window,
     one grid cumulative window, one-row epilogue."""
     rk = _seg_daily_ranks(spark, sf)
+    # window: GRID Anderson-Darling cumulative over the ~4.8k-row day-grid ranks
     wc = Window.orderBy("r").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -491,7 +496,7 @@ def qs395(spark: SparkSession, sf: str) -> DataFrame:
         .alias("mx"),
     )
     terms = (
-        cum.crossJoin(F.broadcast(m))
+        cum.crossJoin(m)
         .filter(F.col("r") < F.col("nn"))
         .agg(
             F.sum(
@@ -720,7 +725,7 @@ def qs397(spark: SparkSession, sf: str) -> DataFrame:
     # Ansari scores need N in-row: join the scalar back (broadcast
     # one-row frame) rather than a second global window.
     c = (
-        rk.crossJoin(F.broadcast(m.select("nn")))
+        rk.crossJoin(m.select("nn"))
         .agg(
             F.sum(
                 F.when(
@@ -734,7 +739,7 @@ def qs397(spark: SparkSession, sf: str) -> DataFrame:
             .alias("c")
         )
     )
-    ev = m.crossJoin(F.broadcast(c))
+    ev = m.crossJoin(c)
     nn = F.col("nn").cast("double")
     n1 = F.col("n1").cast("double")
     n2 = nn - n1
@@ -813,9 +818,11 @@ def _prio_cells_margins(spark: SparkSession, sf: str):
         F.countDistinct("y").cast("long").alias("nc"),
     )
     return (
+        # bcast: GRID row margins of the <=15-cell priority x status grid
         cells.join(F.broadcast(rt), "x")
+        # bcast: GRID column margins of the <=15-cell priority x status grid
         .join(F.broadcast(ct), "y")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
     )
 
 
@@ -1088,13 +1095,15 @@ def qs401(spark: SparkSession, sf: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("y").cast("decimal(38,0)").alias("sy"),
     )
-    z = daily.crossJoin(F.broadcast(s)).select(
+    z = daily.crossJoin(s).select(
         "n",
         (
             F.col("n").cast("decimal(38,0)") * F.col("y") - F.col("sy")
         ).alias("z"),
+        # window: GRID Moran's I: ~2.4k-day calendar grid ordinal
         F.row_number().over(Window.orderBy("d")).alias("t"),
     )
+    # window: GRID Moran's I: calendar-grid lag-1
     lagged = z.withColumn("zp", F.lag("z").over(Window.orderBy("t")))
     m = lagged.agg(
         F.max("n").alias("n"),
@@ -1503,6 +1512,7 @@ def qs402(spark: SparkSession, sf: str) -> DataFrame:
     )
     cand = (
         sig.filter(F.col("vec_id") != 0)
+        # bcast: ONE-ROW the query's signature pivoted to one 4-column row
         .crossJoin(F.broadcast(qsig))
         .filter(
             (F.col("b0") == F.col("q0"))
@@ -1523,6 +1533,7 @@ def qs402(spark: SparkSession, sf: str) -> DataFrame:
     )
     scored = (
         emb.filter(F.col("vec_id") != 0)
+        # bcast: ONE-ROW the single query vector
         .crossJoin(F.broadcast(qv))
         .select(
             "vec_id",
@@ -1543,8 +1554,8 @@ def qs402(spark: SparkSession, sf: str) -> DataFrame:
     n_vec = emb.agg(F.count(F.lit(1)).cast("long").alias("n_vectors"))
     n_cand = cand.agg(F.count(F.lit(1)).cast("long").alias("n_candidates"))
     return (
-        hits.crossJoin(F.broadcast(n_vec))
-        .crossJoin(F.broadcast(n_cand))
+        hits.crossJoin(n_vec)
+        .crossJoin(n_cand)
         .select(
             "n_vectors",
             "n_candidates",

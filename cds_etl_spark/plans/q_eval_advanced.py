@@ -131,6 +131,7 @@ def qs208(spark: SparkSession, sf: str) -> DataFrame:
         "t",
         "y",
         F.row_number()
+        # window: GRID quantile normalization: per-group rank grid over grouped aggregate
         .over(Window.partitionBy("grp").orderBy("y", "t"))
         .alias("rk"),
         F.count(F.lit(1))
@@ -145,11 +146,12 @@ def qs208(spark: SparkSession, sf: str) -> DataFrame:
     )
     big_n = m.agg(F.count(F.lit(1)).alias("big_n"))
     return (
-        r.crossJoin(F.broadcast(big_n))
+        r.crossJoin(big_n)
         .withColumn(
             "gi",
             F.expr("((rk - 1) * (big_n - 1)) div (n - 1) + 1"),
         )
+        # bcast: CALENDAR pooled month-grid distribution (~800 rows, 10 grp x months)
         .join(F.broadcast(g), "gi")
         .select(
             "grp",
@@ -228,6 +230,7 @@ def qs209(spark: SparkSession, sf: str) -> DataFrame:
             " div 10000"
         ).alias("y")
     )
+    # window: GRID seasonal decompose: per-group month grid (+-6 frame)
     wo = Window.partitionBy("grp").orderBy("t")
     wr = wo.rowsBetween(-6, 6)
     w = m.select(
@@ -443,7 +446,7 @@ def qs211(spark: SparkSession, sf: str) -> DataFrame:
     )
     return (
         sh.join(
-            F.broadcast(na),
+            na,
             sh["nationkey"] == na["n_nationkey"],
         )
         .groupBy(F.col("n_name").alias("nation"))
@@ -641,6 +644,7 @@ def qs213(spark: SparkSession, sf: str) -> DataFrame:
         spark.sparkContext.defaultParallelism, "cid"
     ).withColumn("cn", l2_norm(F.col("cv")))
     scored = (
+        # bcast: BOUNDED eval-harness 1/50 query sample; non-equi NLJ regardless of hint; production path is the ANN family
         F.broadcast(q)
         .join(c, F.col("qid") != F.col("cid"))
         .select(
@@ -1099,6 +1103,7 @@ def qs217(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     ix = (
+        # bcast: GRID partkey%100 base-period index, 100 rows
         p.join(F.broadcast(base), "grp")
         .groupBy("t")
         .agg(
@@ -1303,6 +1308,7 @@ def qs219(spark: SparkSession, sf: str) -> DataFrame:
         "c",
         F.sum("c")
         .over(
+            # window: GRID ABC: 200-group cumulative revenue
             Window.orderBy(F.col("c").desc(), "pgrp").rowsBetween(
                 Window.unboundedPreceding, Window.currentRow
             )
@@ -1379,6 +1385,7 @@ def qs220(spark: SparkSession, sf: str) -> DataFrame:
         "cust",
         "y",
         F.ntile(4)
+        # window: REJECT tier ntile per year: qs245-shape measured reject (BASELINE r9 task 5)
         .over(Window.partitionBy("y").orderBy("cents", "cust"))
         .cast("long")
         .alias("tier"),
@@ -1453,6 +1460,7 @@ def qs221(spark: SparkSession, sf: str) -> DataFrame:
             " div 10000"
         ).alias("y")
     )
+    # window: GRID MASE: per-series day grid
     w = Window.partitionBy("grp").orderBy("t")
     lagged = m.select(
         "grp",
@@ -1671,7 +1679,7 @@ def qs223(spark: SparkSession, sf: str) -> DataFrame:
             & (F.col("o_orderdate") < F.lit("1997-01-02").cast("date"))
         )
         .join(cu, o["o_custkey"] == cu["c_custkey"])
-        .join(F.broadcast(n), cu["c_nationkey"] == n["n_nationkey"])
+        .join(n, cu["c_nationkey"] == n["n_nationkey"])
         .select(
             F.col("n_regionkey").alias("rkey"),
             F.col("o_orderdate").cast("date").alias("d"),
@@ -1695,7 +1703,7 @@ def qs223(spark: SparkSession, sf: str) -> DataFrame:
         ).alias("post_c"),
     )
     return agg.join(
-        F.broadcast(rg), agg["rkey"] == rg["r_regionkey"]
+        rg, agg["rkey"] == rg["r_regionkey"]
     ).select(
         F.col("r_name").alias("region"),
         F.col("pre_c").cast("long").alias("pre_cents"),
@@ -1773,9 +1781,10 @@ def qs224(spark: SparkSession, sf: str) -> DataFrame:
         F.countDistinct("term").alias("v"),
     )
     d = (
+        # bcast: GRID per-source totals, one row per source label
         tc.join(F.broadcast(src), "source")
         .join(tot, "term")
-        .crossJoin(F.broadcast(g))
+        .crossJoin(g)
         .select(
             "source",
             "term",
@@ -1948,7 +1957,7 @@ def qs226(spark: SparkSession, sf: str) -> DataFrame:
         .select("term", F.lit(True).alias("inv"))
     )
     cov = (
-        tc.join(F.broadcast(vocab), "term", "left")
+        tc.join(vocab, "term", "left")
         .groupBy("source")
         .agg(
             F.sum("y").alias("n_tokens"),
@@ -2034,6 +2043,7 @@ def qs227(spark: SparkSession, sf: str) -> DataFrame:
         F.sum(F.when(F.col("grp") == 0, 1).otherwise(0)).alias("c0"),
         F.sum(F.when(F.col("grp") == 1, 1).otherwise(0)).alias("c1"),
     )
+    # window: REJECT KS value-grid cumulative: measured reject 2.0->3.5s (r6)
     wc = Window.orderBy("v").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -2041,7 +2051,7 @@ def qs227(spark: SparkSession, sf: str) -> DataFrame:
         F.sum("c0").over(wc).alias("f0"),
         F.sum("c1").over(wc).alias("f1"),
     )
-    gap = cum.crossJoin(F.broadcast(n)).agg(
+    gap = cum.crossJoin(n).agg(
         F.max(
             F.abs(
                 F.col("f0") * F.col("n1") - F.col("f1") * F.col("n0")
@@ -2131,7 +2141,7 @@ def qs228(spark: SparkSession, sf: str) -> DataFrame:
         F.sum("y").alias("osy"),
         F.sum(F.col("t") * F.col("y")).alias("osty"),
     )
-    j = per.crossJoin(F.broadcast(overall))
+    j = per.crossJoin(overall)
     gsign = F.signum(
         (
             F.col("n") * F.col("sty") - F.col("st") * F.col("sy")
@@ -2193,7 +2203,7 @@ def qs229(spark: SparkSession, sf: str) -> DataFrame:
     tot = g.agg(
         F.sum("c").alias("tc"), F.sum("n").alias("tn")
     )
-    return g.crossJoin(F.broadcast(tot)).select(
+    return g.crossJoin(tot).select(
         "grp",
         F.col("n").cast("long").alias("n"),
         F.round(F.col("c").cast("double") / F.col("n"), 4).alias(
@@ -2287,6 +2297,7 @@ def qs230(spark: SparkSession, sf: str) -> DataFrame:
     )
     gp = bucketed_prefix_sum(g, "v", "cnt", "cum_lo", part_cols=("prio",))
     tn = s.groupBy("prio").agg(F.count(F.lit(1)).alias("tn"))
+    # bcast: GRID per-priority totals, 5 rows
     w = gp.join(F.broadcast(tn), "prio")
     var = w.groupBy("prio").agg(
         F.max(
@@ -2298,6 +2309,7 @@ def qs230(spark: SparkSession, sf: str) -> DataFrame:
         ).alias("var95"),
         F.max("tn").alias("tn"),
     )
+    # bcast: GRID per-priority VaR table, 5 rows
     tail = s.join(F.broadcast(var), "prio").filter(
         F.col("v") >= F.col("var95")
     )
@@ -2500,6 +2512,7 @@ def qs232(spark: SparkSession, sf: str) -> DataFrame:
         "day",
         "y",
         F.abs(
+            # window: GRID XmR: ~180-day grid lag
             F.col("y") - F.lag("y").over(Window.orderBy("day"))
         ).alias("mrange"),
     )
@@ -2509,7 +2522,7 @@ def qs232(spark: SparkSession, sf: str) -> DataFrame:
         F.sum("mrange").alias("smr"),
         F.count("mrange").alias("nmr"),
     )
-    j = mr.crossJoin(F.broadcast(lims))
+    j = mr.crossJoin(lims)
     center = F.col("sy").cast("double") / F.col("n")
     band = F.lit(2.66) * F.col("smr") / F.col("nmr")
     hi = F.col("y") * F.col("n") * F.col("nmr") > F.col("sy") * F.col(
@@ -2816,7 +2829,7 @@ def qs235(spark: SparkSession, sf: str) -> DataFrame:
         )
         .filter(F.col("sx") >= 50)
     )
-    return s.crossJoin(F.broadcast(nd)).select(
+    return s.crossJoin(nd).select(
         "term",
         F.col("sx").cast("long").alias("total_count"),
         F.col("docs_in").cast("long").alias("docs_in"),
@@ -2899,7 +2912,7 @@ def qs236(spark: SparkSession, sf: str) -> DataFrame:
     tot = w.agg(
         F.sum("n0").alias("tn0"), F.sum("n1").alias("tn1")
     )
-    j = w.crossJoin(F.broadcast(tot))
+    j = w.crossJoin(tot)
     w0 = F.col("n0").cast("double") / F.col("tn0")
     w1 = F.col("n1").cast("double") / F.col("tn1")
     m0 = F.col("c0").cast("double") / F.col("n0")
@@ -2980,6 +2993,7 @@ def qs237(spark: SparkSession, sf: str) -> DataFrame:
             " div 10000"
         ).alias("y")
     )
+    # window: GRID seasonal index: per-group month grid
     wo = Window.partitionBy("grp").orderBy("t")
     wr = wo.rowsBetween(-6, 6)
     w = m.select(
@@ -3161,6 +3175,7 @@ def qs239(spark: SparkSession, sf: str) -> DataFrame:
         # the bounded policy (operators/pin.py).
         .localCheckpoint(eager=True)
     )
+    # bcast: GRID per-returnflag quartiles, 3 rows
     j = b.join(F.broadcast(q), "grp")
     iqr = F.col("q3") - F.col("q1")
     lo = F.col("q1") - 1.5 * iqr

@@ -264,7 +264,7 @@ def qs276(spark: SparkSession, sf: str) -> DataFrame:
         F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("x0"),
         F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("x1"),
     )
-    z = conv.crossJoin(F.broadcast(narm))
+    z = conv.crossJoin(narm)
     p0 = F.col("x0").cast("double") / F.col("n0")
     p1 = F.col("x1").cast("double") / F.col("n1")
     phat = (F.col("x0") + F.col("x1")).cast("double") / (
@@ -293,6 +293,7 @@ def qs276(spark: SparkSession, sf: str) -> DataFrame:
         _ERF_POLY.format(t=_ERF_T.format(x=x)) + f" * exp(-({x} * {x}))"
     )
     p = z.withColumn("ptwo", ptwo)
+    # window: GRID BH FDR: 5 p-values
     wrank = Window.orderBy("ptwo", "event_type")
     wall = Window.partitionBy()
     r = p.withColumn("i", F.row_number().over(wrank)).withColumn(
@@ -481,7 +482,7 @@ def qs278(spark: SparkSession, sf: str) -> DataFrame:
     )
     g = v.agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
     c = g.select(F.expr("s DIV n").alias("c"), "n")
-    d = v.crossJoin(F.broadcast(c)).select(
+    d = v.crossJoin(c).select(
         (F.col("v") - F.col("c")).alias("d"), "n"
     )
     m = d.agg(
@@ -626,6 +627,7 @@ def qs279(spark: SparkSession, sf: str) -> DataFrame:
             F.when(F.col("event_type") == "purchase", 1).otherwise(0)
         ).alias("yc"),
     )
+    # window: GRID Granger: 30-day grid
     wlag = Window.orderBy("day")
     lagd = daily.select(
         F.col("yc").alias("y"),

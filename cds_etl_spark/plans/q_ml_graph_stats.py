@@ -179,6 +179,7 @@ def qs242(spark: SparkSession, sf: str) -> DataFrame:
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
     ).agg(F.sum(cents).alias("x"))
+    # window: GRID CUSUM: event_type x day grid
     wd = Window.partitionBy("event_type").orderBy("day")
     wall = Window.partitionBy("event_type")
     c = (
@@ -195,6 +196,7 @@ def qs242(spark: SparkSession, sf: str) -> DataFrame:
     ).withColumn(
         "rn",
         F.row_number().over(
+            # window: GRID CUSUM: event_type x day grid
             Window.partitionBy("event_type").orderBy(
                 F.col("abst").desc(), "day"
             )
@@ -308,6 +310,7 @@ def qs243(spark: SparkSession, sf: str) -> DataFrame:
     # build beats sorting the corpus side (2.5 -> 2.0 s); the grid is
     # bounded by distinct price cents, so per-partition hash builds
     # stay small at any corpus scale.
+    # bcast: GRID (flag, quantity) midrank grid <= 3x50; the near-unique price ranks join is SHUFFLE_HASH (scale-safe: per-partition build over the bounded price-cents grid), not broadcast
     r = b.join(F.broadcast(rx), ["flag", "qx"]).join(
         ry.hint("shuffle_hash"), ["flag", "qy"]
     )
@@ -507,6 +510,7 @@ def qs245(spark: SparkSession, sf: str) -> DataFrame:
     )
     scored = spend.join(resp, "o_custkey", "left").select(
         F.ntile(10)
+        # window: REJECT gains/lift ntile-over-customers: measured reject 2.1->10s (r7)
         .over(Window.orderBy(F.col("s").desc(), "o_custkey"))
         .alias("decile"),
         F.coalesce(F.col("y1"), F.lit(0)).alias("y"),
@@ -514,6 +518,7 @@ def qs245(spark: SparkSession, sf: str) -> DataFrame:
     d = scored.groupBy("decile").agg(
         F.count(F.lit(1)).alias("n"), F.sum("y").alias("r")
     )
+    # window: EPILOGUE gains/lift: 10-row decile epilogue
     wc = Window.orderBy("decile").rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -1032,9 +1037,11 @@ def qs252(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("i"))
     )
     out = inter.join(
+        # bcast: GRID per-source vocab sizes, one row per source label
         F.broadcast(sz.select(F.col("source").alias("s1"), F.col("v").alias("v1_"))),
         "s1",
     ).join(
+        # bcast: GRID per-source vocab sizes, one row per source label
         F.broadcast(sz.select(F.col("source").alias("s2"), F.col("v").alias("v2_"))),
         "s2",
     )
@@ -1136,7 +1143,7 @@ def qs253(spark: SparkSession, sf: str) -> DataFrame:
         .select("term")
     )
     grid = (
-        tot.crossJoin(F.broadcast(top))
+        tot.crossJoin(top)
         .join(cnt, ["source", "term"], "left")
         .select(
             "source",
@@ -1340,7 +1347,7 @@ def qs255(spark: SparkSession, sf: str) -> DataFrame:
     idf = (
         tf.groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(stats.select("n")))
+        .crossJoin(stats.select("n"))
         .select(
             "term",
             F.log(
@@ -1351,9 +1358,10 @@ def qs255(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     scored = (
+        # bcast: LITERAL per-term IDF over the fixed literal _BM25_TERMS list
         tf.join(F.broadcast(idf), "term")
         .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(stats)
         .groupBy("doc_id")
         .agg(
             F.sum(

@@ -158,7 +158,7 @@ def qs257(spark: SparkSession, sf: str) -> DataFrame:
     idf = (
         tf.groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(stats.select("n")))
+        .crossJoin(stats.select("n"))
         .select(
             "term",
             F.log(
@@ -169,9 +169,10 @@ def qs257(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     bm = (
+        # bcast: LITERAL per-term IDF over the fixed literal _RRF_TERMS list
         tf.join(F.broadcast(idf), "term")
         .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(stats)
         .groupBy("doc_id")
         .agg(
             F.sum(
@@ -204,6 +205,7 @@ def qs257(spark: SparkSession, sf: str) -> DataFrame:
         .select(
             "doc_id",
             F.row_number()
+            # window: EPILOGUE RRF: window over 100 TakeOrdered survivors
             .over(Window.orderBy(F.col("s4").desc(), "doc_id"))
             .alias("r"),
         )
@@ -216,6 +218,7 @@ def qs257(spark: SparkSession, sf: str) -> DataFrame:
         .select(
             "doc_id",
             F.row_number()
+            # window: EPILOGUE RRF: window over 100 TakeOrdered survivors
             .over(Window.orderBy(F.col("n_chars").desc(), "doc_id"))
             .alias("r"),
         )
@@ -388,6 +391,7 @@ def qs259(spark: SparkSession, sf: str) -> DataFrame:
     h = b.groupBy("bkt").agg(
         F.count(F.lit(1)).alias("n"), F.sum("y").alias("pos")
     )
+    # window: GRID stump: ~120 cents-bucket grid
     wc = Window.orderBy("bkt").rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -422,6 +426,7 @@ def qs259(spark: SparkSession, sf: str) -> DataFrame:
         cost.alias("cost"),
     )
     best = s.withColumn(
+        # window: GRID stump: ~120 cents-bucket grid
         "rk", F.row_number().over(Window.orderBy("cost", "bkt"))
     ).filter(F.col("rk") == 1)
     return best.select(
@@ -925,6 +930,7 @@ def qs264(spark: SparkSession, sf: str) -> DataFrame:
     test = lab.filter(F.col("ck") % 2 == 0)
     td = train.select(
         F.ntile(10)
+        # window: REJECT calibration deciles: qs245-shape measured reject (BASELINE r9 task 5)
         .over(Window.orderBy(F.col("s").desc(), "ck"))
         .alias("d"),
         "s",
@@ -936,11 +942,13 @@ def qs264(spark: SparkSession, sf: str) -> DataFrame:
         F.sum("y").alias("r_train"),
     )
     assigned = (
+        # bcast: GRID decile model, 10 rows
         test.join(F.broadcast(model), test["s"] >= model["lo"], "left")
         .groupBy("ck", "y")
         .agg(F.coalesce(F.min("d"), F.lit(10)).alias("d"))
     )
     bins = (
+        # bcast: GRID decile model, 10 rows
         assigned.join(F.broadcast(model), "d")
         .groupBy("d")
         .agg(
@@ -953,7 +961,7 @@ def qs264(spark: SparkSession, sf: str) -> DataFrame:
     tot = bins.agg(F.sum("n_test").alias("nt"))
     conf = F.col("r_train").cast("double") / F.col("n_train")
     acc = F.col("hits").cast("double") / F.col("n_test")
-    return bins.crossJoin(F.broadcast(tot)).select(
+    return bins.crossJoin(tot).select(
         F.col("d").alias("decile"),
         F.col("n_test").cast("long").alias("n_test"),
         F.round(conf, 4).alias("confidence"),
@@ -1008,7 +1016,7 @@ def qs265(spark: SparkSession, sf: str) -> DataFrame:
         F.stddev_samp(cents).alias("sh"),
     )
     t = g.agg(F.sum(F.col("nh") * F.col("sh")).alias("tot"))
-    return g.crossJoin(F.broadcast(t)).select(
+    return g.crossJoin(t).select(
         "stratum",
         F.col("nh").cast("long").alias("n_stratum"),
         F.round(F.col("sh") / 100.0, 2).alias("sigma_dollars"),
@@ -1145,8 +1153,9 @@ def qs267(spark: SparkSession, sf: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).alias("c"))
     ctx = pair.groupBy("cur").agg(F.sum("c").alias("n"))
     tot = pair.agg(F.sum("c").alias("t"))
+    # bcast: GRID per-event-type context totals, 5 rows
     terms = pair.join(F.broadcast(ctx), "cur").crossJoin(
-        F.broadcast(tot)
+        tot
     )
     p_joint = F.col("c").cast("double") / F.col("t")
     return terms.agg(
@@ -1281,6 +1290,7 @@ def qs268(spark: SparkSession, sf: str) -> DataFrame:
     tot = cnt.groupBy("source").agg(F.sum("c").alias("tot"))
     out = (
         pairs.join(
+            # bcast: GRID per-source totals, one row per source label
             F.broadcast(
                 tot.select(
                     F.col("source").alias("s1"),
@@ -1290,6 +1300,7 @@ def qs268(spark: SparkSession, sf: str) -> DataFrame:
             "s1",
         )
         .join(
+            # bcast: GRID per-source totals, one row per source label
             F.broadcast(
                 tot.select(
                     F.col("source").alias("s2"),
@@ -1299,6 +1310,7 @@ def qs268(spark: SparkSession, sf: str) -> DataFrame:
             "s2",
         )
         .join(
+            # bcast: GRID source-pair overlaps, <= |sources|^2 rows
             F.broadcast(
                 shared.select(
                     F.col("s").alias("s1"),
@@ -1309,6 +1321,7 @@ def qs268(spark: SparkSession, sf: str) -> DataFrame:
             ["s1", "s2"],
         )
         .join(
+            # bcast: GRID source-pair overlaps, <= |sources|^2 rows
             F.broadcast(
                 shared.select(
                     F.col("o").alias("s1"),
@@ -1520,7 +1533,7 @@ def qs285(spark: SparkSession, sf: str) -> DataFrame:
     # Edge count from degrees (Σd = 2E) — one fewer reference to
     # the expensive pair-projection subplan.
     ecnt = deg.agg(F.expr("SUM(d) DIV 2").alias("n_edges"))
-    return agg.crossJoin(F.broadcast(ecnt)).select(
+    return agg.crossJoin(ecnt).select(
         F.col("n_nodes").cast("long").alias("n_nodes"),
         F.col("n_edges").cast("long").alias("n_edges"),
         F.expr("t3 DIV 3").cast("long").alias("n_triangles"),
@@ -1617,7 +1630,7 @@ def qs294(spark: SparkSession, sf: str) -> DataFrame:
     # per execution. A JVM literal fixes the physics, and pinning club
     # (re-referenced by cn/c1/c2) gives AQE accurate sizes so it picks
     # the broadcast itself while club is genuinely small (no explicit
-    # hint: club is node-dimension-sized — allowlist policy).
+    # hint: club is node-dimension-sized — broadcast-tag policy).
     ks = spark.range(1).select(
         F.explode(
             F.array(F.lit(2), F.lit(4), F.lit(8), F.lit(16))

@@ -121,7 +121,7 @@ def qs157(spark: SparkSession, sf: str) -> DataFrame:
     score = (
         bge.join(cbg, ["w1", "w2"])
         .join(cctx, "w1")
-        .crossJoin(F.broadcast(v))
+        .crossJoin(v)
         .groupBy("doc_id", "lang")
         .agg(
             F.round(
@@ -130,6 +130,7 @@ def qs157(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("lp")
         )
     )
+    # window: REJECT per-lang perplexity rank: qs245-shape measured reject (BASELINE r9 task 5)
     w = Window.partitionBy("lang").orderBy(F.col("lp").desc(), "doc_id")
     tiered = score.withColumn("t3", F.ntile(3).over(w))
     tier = F.element_at(
@@ -434,6 +435,7 @@ def qs161(spark: SparkSession, sf: str) -> DataFrame:
     # the histogram twice and recompute it from the corpus scan twice
     # (measured: this window form halves sf10 wall time). Every window
     # below shares partitionBy(st) — one exchange after the histogram.
+    # window: GRID winsorized: per-status cents-histogram buckets; in-code measured note (halves sf10)
     wc = Window.partitionBy("st").orderBy("bucket").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -853,6 +855,7 @@ def qs165(spark: SparkSession, sf: str) -> DataFrame:
         iv.select("prio", F.col("hi").alias("day"), F.lit(-1).alias("d"))
     )
     daily = deltas.groupBy("prio", "day").agg(F.sum("d").alias("d"))
+    # window: GRID sweepline: prio x day grid
     wcum = Window.partitionBy("prio").orderBy("day").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -1121,6 +1124,7 @@ def qs169(spark: SparkSession, sf: str) -> DataFrame:
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
     ).agg(F.sum(cents).alias("c"))
+    # window: GRID changepoint: event_type x day grid
     word = Window.partitionBy("event_type").orderBy("day")
     wall = Window.partitionBy("event_type")
     pre = (
@@ -1149,6 +1153,7 @@ def qs169(spark: SparkSession, sf: str) -> DataFrame:
     best = shifts.withColumn(
         "rn",
         F.row_number().over(
+            # window: GRID changepoint: event_type x day grid
             Window.partitionBy("event_type").orderBy(
                 F.col("shift").desc(), "day"
             )
@@ -1412,8 +1417,8 @@ def qs172(spark: SparkSession, sf: str) -> DataFrame:
         li.join(s, li["l_suppkey"] == s["s_suppkey"])
         .join(o, li["l_orderkey"] == o["o_orderkey"])
         .join(c, o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(n1), s["s_nationkey"] == F.col("n1_key"))
-        .join(F.broadcast(n2), c["c_nationkey"] == F.col("n2_key"))
+        .join(n1, s["s_nationkey"] == F.col("n1_key"))
+        .join(n2, c["c_nationkey"] == F.col("n2_key"))
         .filter(F.col("src") != F.col("dst"))
         .groupBy("src", "dst")
         .agg(F.sum(cents).alias("vol"))

@@ -86,7 +86,7 @@ def qs03(spark: SparkSession, sf: str) -> DataFrame:
     n = load_table(spark, sf, "nation")
     r = load_table(spark, sf, "region")
     return n.join(
-        F.broadcast(r), n.n_regionkey == r.r_regionkey, "inner"
+        r, n.n_regionkey == r.r_regionkey, "inner"
     ).select("n_name", "r_name")
 
 
@@ -426,6 +426,7 @@ def qs21(spark: SparkSession, sf: str) -> DataFrame:
             # ASC NULLS FIRST pinned on both sides (Spark's default,
             # explicit since the r15 NULL axis).
             F.row_number().over(
+                # window: EPILOGUE ranking family: 5-row priority dictionary (r9 rewire; NULLS FIRST pinned r15)
                 Window.orderBy(F.col("_p").asc_nulls_first())
             ),
         )
@@ -435,10 +436,11 @@ def qs21(spark: SparkSession, sf: str) -> DataFrame:
         # Null-safe dictionary join: a NULL priority is a dictionary
         # entry too, and a plain equi-join would drop those rows.
         ranked.join(
+            # bcast: GRID distinct order priorities, 5 rows (+ the NULL-priority partition)
             F.broadcast(prio),
             F.col("o_orderpriority").eqNullSafe(F.col("_p")),
         )
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .select(
             "o_orderkey",
             F.col("_r").cast("int").alias("r"),
@@ -1043,12 +1045,12 @@ def qs300(spark: SparkSession, sf: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_customers"),
     )
     row = (
-        om.crossJoin(F.broadcast(lm))
-        .crossJoin(F.broadcast(orph))
-        .crossJoin(F.broadcast(dup))
-        .crossJoin(F.broadcast(dates))
-        .crossJoin(F.broadcast(ssn))
-        .crossJoin(F.broadcast(neg))
+        om.crossJoin(lm)
+        .crossJoin(orph)
+        .crossJoin(dup)
+        .crossJoin(dates)
+        .crossJoin(ssn)
+        .crossJoin(neg)
     )
     return row.select(
         F.col("n_orders").cast("long").alias("n_orders"),

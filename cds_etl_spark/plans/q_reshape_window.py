@@ -257,6 +257,7 @@ def qs24(spark: SparkSession, sf: str) -> DataFrame:
         # Null-safe: a NULL status is a partition too — a plain
         # equi-join dropped its rows (r15 NULL axis).
         rn.join(
+            # bcast: GRID per-orderstatus frame endpoints, 3 rows (+ the NULL-status partition)
             F.broadcast(stats),
             F.col("o_orderstatus").eqNullSafe(F.col("_st")),
         )

@@ -223,7 +223,7 @@ def qs71(spark: SparkSession, sf: str) -> DataFrame:
     )
     n = s.agg(F.count(F.lit(1)).alias("_n"))
     return (
-        rn.crossJoin(F.broadcast(n))
+        rn.crossJoin(n)
         .select(
             "o_orderkey",
             F.round(
@@ -401,7 +401,7 @@ def qs78(spark: SparkSession, sf: str) -> DataFrame:
     o = load_table(spark, sf, "orders")
     avg = o.agg(F.round(F.avg("o_totalprice"), 4).alias("_avg"))
     return (
-        o.crossJoin(F.broadcast(avg))
+        o.crossJoin(avg)
         .select(
             "o_orderkey",
             F.round(F.col("o_totalprice") / F.col("_avg"), 6).alias("ratio"),

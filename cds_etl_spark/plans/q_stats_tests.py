@@ -93,7 +93,7 @@ def qs269(spark: SparkSession, sf: str) -> DataFrame:
     days = d.select("day").distinct()
     groups = spark.range(2).select(F.col("id").alias("g"))
     grid = (
-        days.crossJoin(F.broadcast(groups))
+        days.crossJoin(groups)
         .join(d, ["day", "g"], "left")
         .select("day", "g", F.coalesce("d", F.lit(0)).alias("d"))
     )
@@ -103,6 +103,7 @@ def qs269(spark: SparkSession, sf: str) -> DataFrame:
         .orderBy("day")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
+    # bcast: ONE-ROW global .agg() scalar frame (one row by construction)
     risk = grid.join(F.broadcast(tot), "g").withColumn(
         "n",
         F.col("tot")
@@ -344,7 +345,7 @@ def qs271(spark: SparkSession, sf: str) -> DataFrame:
             * F.col("r2_g")
             / (F.lit(4.0) * F.col("n_g"))
         ).alias("rsq"),
-    ).crossJoin(F.broadcast(ties))
+    ).crossJoin(ties)
     h = t.select(
         "n",
         (
@@ -364,7 +365,7 @@ def qs271(spark: SparkSession, sf: str) -> DataFrame:
         ).alias("cf"),
     )
     return (
-        pg.crossJoin(F.broadcast(h))
+        pg.crossJoin(h)
         .select(
             F.col("g").alias("priority"),
             F.col("n_g").cast("long").alias("n_g"),
@@ -657,6 +658,7 @@ def qs273(spark: SparkSession, sf: str) -> DataFrame:
     chi = (
         cells.join(rt, ["pair", "x"])
         .join(ct, ["pair", "y"])
+        # bcast: GRID per-column-pair totals, 3 rows
         .join(F.broadcast(n.select("pair", "n")), "pair")
         .groupBy("pair")
         .agg(
@@ -670,6 +672,7 @@ def qs273(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     return (
+        # bcast: GRID per-column-pair totals, 3 rows
         chi.join(F.broadcast(n), "pair")
         .select(
             "pair",
@@ -770,11 +773,13 @@ def qs274(spark: SparkSession, sf: str) -> DataFrame:
     tot = cnt.groupBy("source").agg(F.sum("c").alias("t"))
     p = F.col("c") * F.lit(1.0) / F.col("t")
     plp = (
+        # bcast: GRID per-source token totals, one row per source label
         cnt.join(F.broadcast(tot), "source")
         .groupBy("source")
         .agg(F.sum(p * F.log(p)).alias("plp"))
     )
     a = (
+        # bcast: GRID per-source token totals, one row per source label
         cnt.join(F.broadcast(tot), "source")
         .select(
             F.col("source").alias("s1"),
@@ -783,6 +788,7 @@ def qs274(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     b = (
+        # bcast: GRID per-source token totals, one row per source label
         cnt.join(F.broadcast(tot), "source")
         .select(
             F.col("source").alias("s2"),
@@ -806,6 +812,7 @@ def qs274(spark: SparkSession, sf: str) -> DataFrame:
     ln2 = F.lit(0.6931471805599453)
     out = (
         shared.join(
+            # bcast: GRID per-source plogp sums, one row per source label
             F.broadcast(
                 plp.select(
                     F.col("source").alias("s1"),
@@ -815,6 +822,7 @@ def qs274(spark: SparkSession, sf: str) -> DataFrame:
             "s1",
         )
         .join(
+            # bcast: GRID per-source plogp sums, one row per source label
             F.broadcast(
                 plp.select(
                     F.col("source").alias("s2"),
@@ -962,7 +970,7 @@ def qs288(spark: SparkSession, sf: str) -> DataFrame:
         ).alias("ties")
     )
     tot = pg.agg(F.sum("n_g").alias("n")).crossJoin(
-        F.broadcast(ties)
+        ties
     )
     a = pg.select(
         F.col("g").alias("g1"),
@@ -976,7 +984,7 @@ def qs288(spark: SparkSession, sf: str) -> DataFrame:
     )
     pairs = (
         a.join(b, F.col("g1") < F.col("g2"))
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "g1",
             "g2",
@@ -1004,6 +1012,7 @@ def qs288(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     p = pairs.withColumn("ptwo", F.expr(_DUNN_P))
+    # window: GRID Dunn: k^2 group-pair grid
     wrank = Window.orderBy("ptwo", "g1", "g2")
     wall = Window.partitionBy()
     r = p.withColumn("i", F.row_number().over(wrank)).withColumn(
@@ -1101,6 +1110,7 @@ def qs289(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("_k") == 5)
         .select("b")
     )
+    # window: GRID Friedman: week x 5 cell grid
     wrank = Window.partitionBy("b").orderBy("x")
     wtie = Window.partitionBy("b", "x")
     r = wk.join(full_, "b").select(
@@ -1114,7 +1124,7 @@ def qs289(spark: SparkSession, sf: str) -> DataFrame:
     )
     tr = r.groupBy("t").agg(F.sum("mr2").alias("r2"))
     nb = full_.agg(F.count(F.lit(1)).alias("b"))
-    chi = tr.crossJoin(F.broadcast(nb)).agg(
+    chi = tr.crossJoin(nb).agg(
         F.max("b").alias("b"),
         (
             F.lit(12.0)
@@ -1335,6 +1345,7 @@ def qs291(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("g")
         .agg(F.min("v").alias("med"))
     )
+    # bcast: GRID per-group medians, 5 rows
     z = s.join(F.broadcast(med), "g").select(
         "g", F.abs(F.col("v") - F.col("med")).alias("z")
     )
@@ -1626,6 +1637,7 @@ def qs299(spark: SparkSession, sf: str) -> DataFrame:
     marg = (
         cells.agg(F.sum("c").alias("n"))
         .crossJoin(
+            # bcast: ONE-ROW global .agg() scalar frame (one row by construction)
             F.broadcast(
                 rx.agg(
                     F.sum(
@@ -1635,16 +1647,15 @@ def qs299(spark: SparkSession, sf: str) -> DataFrame:
             )
         )
         .crossJoin(
-            F.broadcast(
-                ry.agg(
-                    F.sum(
-                        F.col("r").cast("decimal(38,0)") * (F.col("r") - 1)
-                    ).alias("ty2")
-                )
+            ry.agg(
+                F.sum(
+                    F.col("r").cast("decimal(38,0)") * (F.col("r") - 1)
+                ).alias("ty2")
             )
         )
     )
     nn = F.col("n").cast("double")
+    # bcast: ONE-ROW global .agg() scalar frame (one row by construction)
     return cd.crossJoin(F.broadcast(marg)).select(
         F.col("n").cast("long").alias("n"),
         F.col("conc").cast("long").alias("concordant"),
@@ -1712,7 +1723,7 @@ def qs301(spark: SparkSession, sf: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).alias("c"))
     n = cells.agg(F.sum("c").alias("n"))
     ry = cells.groupBy("y").agg(F.sum("c").alias("r"))
-    hy = ry.crossJoin(F.broadcast(n)).agg(
+    hy = ry.crossJoin(n).agg(
         (
             -F.sum(
                 (F.col("r").cast("double") / F.col("n"))
@@ -1723,7 +1734,7 @@ def qs301(spark: SparkSession, sf: str) -> DataFrame:
     rx = cells.groupBy("x").agg(F.sum("c").alias("r"))
     hyx = (
         cells.join(rx, "x")
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .agg(
             (
                 -F.sum(
@@ -1736,8 +1747,8 @@ def qs301(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     return (
-        n.crossJoin(F.broadcast(hy))
-        .crossJoin(F.broadcast(hyx))
+        n.crossJoin(hy)
+        .crossJoin(hyx)
         .select(
             F.col("n").cast("long").alias("n"),
             F.round("hy", 4).alias("h_y"),
@@ -1813,6 +1824,7 @@ def qs302(spark: SparkSession, sf: str) -> DataFrame:
             F.round(F.col("value") * 100, 0).cast("long")
         ).alias("x")
     )
+    # window: GRID runs test: 30-day grid
     wrn = Window.orderBy("x", "day")
     wall = Window.partitionBy()
     med = (
@@ -1821,10 +1833,11 @@ def qs302(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("rn") >= F.expr("(n + 1) DIV 2"))
         .agg(F.min("x").alias("m"))
     )
-    lab = daily.crossJoin(F.broadcast(med)).select(
+    lab = daily.crossJoin(med).select(
         "day",
         F.when(F.col("x") > F.col("m"), 1).otherwise(0).alias("hi"),
     )
+    # window: GRID runs test: 30-day grid
     wday = Window.orderBy("day")
     runs = lab.select(
         "hi",
@@ -1921,7 +1934,7 @@ def qs303(spark: SparkSession, sf: str) -> DataFrame:
         F.sum(F.col("t") * F.col("t")).alias("sxx"),
         F.sum(F.col("t").cast("decimal(38,0)") * F.col("y")).alias("sxy"),
     )
-    e = m.crossJoin(F.broadcast(s)).select(
+    e = m.crossJoin(s).select(
         "t",
         (
             (dec("n") * dec("sxx") - dec("sx") * dec("sx")) * dec("y")
@@ -1929,6 +1942,7 @@ def qs303(spark: SparkSession, sf: str) -> DataFrame:
             - (dec("n") * dec("sxy") - dec("sx") * dec("sy")) * dec("t")
         ).alias("e"),
     )
+    # window: GRID Durbin-Watson: day-grid lag
     lagw = Window.orderBy("t")
     d = e.withColumn("pe", F.lag("e").over(lagw)).agg(
         F.sum(F.col("e") * F.col("e")).alias("see"),
@@ -1937,6 +1951,7 @@ def qs303(spark: SparkSession, sf: str) -> DataFrame:
             .otherwise((F.col("e") - F.col("pe")) * (F.col("e") - F.col("pe")))
         ).alias("sdd"),
     )
+    # bcast: ONE-ROW global .agg() scalar frame (one row by construction)
     return s.crossJoin(F.broadcast(d)).select(
         F.col("n").cast("long").alias("n_months"),
         F.round(
@@ -2013,6 +2028,7 @@ def qs304(spark: SparkSession, sf: str) -> DataFrame:
     v = li.groupBy(F.col("l_quantity").cast("long").alias("q")).agg(
         F.count(F.lit(1)).alias("c")
     )
+    # window: GRID Mood median: ~50-quantity value grid
     cumw = Window.orderBy("q").rowsBetween(Window.unboundedPreceding, 0)
     med = (
         v.withColumn("cum", F.sum("c").over(cumw))
@@ -2020,7 +2036,7 @@ def qs304(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("cum") >= (F.col("nn") + 1) / 2)
         .agg(F.min("q").alias("m"))
     )
-    cells = li.crossJoin(F.broadcast(med)).agg(
+    cells = li.crossJoin(med).agg(
         *[
             agg
             for f in _MOOD_FLAGS
@@ -2132,8 +2148,8 @@ def qs305(spark: SparkSession, sf: str) -> DataFrame:
     )
     n = m.agg(F.count(F.lit(1)).alias("n"))
     return (
-        n.crossJoin(F.broadcast(s))
-        .crossJoin(F.broadcast(ties))
+        n.crossJoin(s)
+        .crossJoin(ties)
         .select(
             F.col("n").cast("long").alias("n_months"),
             F.col("s").cast("long").alias("s"),
@@ -2218,10 +2234,10 @@ def qs306(spark: SparkSession, sf: str) -> DataFrame:
             F.col("y").cast("decimal(38,0)") * F.col("y")
         ).alias("syy"),
     )
-    d = m.crossJoin(F.broadcast(s)).agg(
+    d = m.crossJoin(s).agg(
         F.max(F.abs(dec("n") * dec("y") - F.col("sy"))).alias("maxdev")
     )
-    return s.crossJoin(F.broadcast(d)).select(
+    return s.crossJoin(d).select(
         F.col("n").cast("long").alias("n_months"),
         F.col("maxdev").cast("long").alias("max_abs_dev_n"),
         F.round(
@@ -2420,7 +2436,7 @@ def qs310(spark: SparkSession, sf: str) -> DataFrame:
         F.sum(F.when(F.col("g") == "A", F.col("c")).otherwise(0)).alias("n1"),
         F.sum(F.when(F.col("g") == "R", F.col("c")).otherwise(0)).alias("n2"),
     )
-    return cells.crossJoin(F.broadcast(n)).select(
+    return cells.crossJoin(n).select(
         F.col("n1").cast("long").alias("n1"),
         F.col("n2").cast("long").alias("n2"),
         F.round(
@@ -2902,7 +2918,7 @@ def qs318(spark: SparkSession, sf: str) -> DataFrame:
         ).alias("t")
     ).agg(F.count(F.lit(1)).alias("y"))
     s = m.agg(F.count(F.lit(1)).alias("n"), F.sum("y").alias("sy"))
-    e = m.crossJoin(F.broadcast(s)).select(
+    e = m.crossJoin(s).select(
         "t",
         "n",
         (
@@ -2934,7 +2950,9 @@ def qs318(spark: SparkSession, sf: str) -> DataFrame:
         term = rho * rho / (F.col("n") - k)
         qsum = term if qsum is None else qsum + term
     return (
+        # bcast: ONE-ROW global .agg() scalar frame (one row by construction)
         s.crossJoin(F.broadcast(c0))
+        # bcast: ONE-ROW global .agg() scalar frame (one row by construction)
         .crossJoin(F.broadcast(piv))
         .select(
             F.col("n").cast("long").alias("n_months"),
@@ -3087,20 +3105,21 @@ def qs320(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("vt")
         )
     )
+    # window: GRID Pettitt: day-grid cumulative
     cumw = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
     u = v.select("t", F.sum("vt").over(cumw).alias("ut"))
     k = u.agg(F.max(F.abs(F.col("ut"))).alias("k"))
     n = m.agg(F.count(F.lit(1)).alias("n"))
     cp = (
-        u.crossJoin(F.broadcast(k))
+        u.crossJoin(k)
         .filter(F.abs(F.col("ut")) == F.col("k"))
         .agg(F.min("t").alias("t_star"))
     )
     nn = F.col("n").cast("double")
     kk = F.col("k").cast("double")
     return (
-        n.crossJoin(F.broadcast(k))
-        .crossJoin(F.broadcast(cp))
+        n.crossJoin(k)
+        .crossJoin(cp)
         .select(
             F.col("n").cast("long").alias("n_months"),
             F.col("k").cast("long").alias("k_stat"),
@@ -3183,6 +3202,7 @@ def qs321(spark: SparkSession, sf: str) -> DataFrame:
         F.col("_k") == 5
     ).select("b")
     wkf = wk.join(full_, "b")
+    # window: GRID Kendall W: week x 5 cell grid
     rw = Window.partitionBy("b").orderBy("x")
     tw = Window.partitionBy("b", "x")
     r = wkf.select(
@@ -3225,7 +3245,9 @@ def qs321(spark: SparkSession, sf: str) -> DataFrame:
         )
         dev2 = term if dev2 is None else dev2 + term
     return (
+        # bcast: ONE-ROW global .agg() scalar frame (one row by construction)
         nb.crossJoin(F.broadcast(ties))
+        # bcast: ONE-ROW global .agg() scalar frame (one row by construction)
         .crossJoin(F.broadcast(tr))
         .select(
             F.col("b").cast("long").alias("n_blocks"),

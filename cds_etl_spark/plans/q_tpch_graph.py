@@ -163,8 +163,8 @@ def qs103(spark: SparkSession, sf: str) -> DataFrame:
             (F.col("l_suppkey") == F.col("s_suppkey"))
             & (F.col("c_nationkey") == F.col("s_nationkey")),
         )
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
+        .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(r, F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("n_name")
         .agg(
             F.round(
@@ -272,6 +272,7 @@ def qs106(spark: SparkSession, sf: str) -> DataFrame:
     flags — both windows shuffle-partition on keys, no state larger
     than a row ever accumulates."""
     e = load_table(spark, sf, "events")
+    # window: HIGH-CARD composite key includes user_id - scales with corpus, no cliff
     w_first = Window.partitionBy("event_type", "user_id").orderBy(
         "ts", "event_id"
     )
@@ -688,7 +689,7 @@ def qs115(spark: SparkSession, sf: str) -> DataFrame:
     n = clean.agg(F.countDistinct("doc_id").alias("n"))
     scored = (
         tf.join(idf, "term")
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .select(
             "doc_id",
             "term",
@@ -800,8 +801,8 @@ def qs117(spark: SparkSession, sf: str) -> DataFrame:
         .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
+        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
+        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
         .filter(
             ((F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2"))
             | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
@@ -854,7 +855,7 @@ def qs118(spark: SparkSession, sf: str) -> DataFrame:
         .join(li.filter(F.col("l_returnflag") == "R"),
               F.col("o_orderkey") == F.col("l_orderkey"))
         .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(n, F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg(F.sum(rev).alias("rev_e4"))
         .orderBy(F.col("rev_e4").desc(), "c_custkey")
@@ -926,7 +927,7 @@ def qs119(spark: SparkSession, sf: str) -> DataFrame:
     return (
         bge.join(cbg, ["w1", "w2"])
         .join(cctx, "w1")
-        .crossJoin(F.broadcast(v))
+        .crossJoin(v)
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
@@ -1018,6 +1019,7 @@ def qs121(spark: SparkSession, sf: str) -> DataFrame:
         F.max("p_size").alias("msize")
     )
     w = (
+        # window: GRID price frontier: domain-bounded <=120k distinct 2-dp prices
         Window.orderBy("price")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -1030,6 +1032,7 @@ def qs121(spark: SparkSession, sf: str) -> DataFrame:
     )
     return (
         p.join(
+            # bcast: GRID Pareto frontier <= 50 rows (p_size domain)
             F.broadcast(frontier_pairs),
             (p["p_retailprice"] == F.col("price"))
             & (p["p_size"] == F.col("size")),

@@ -45,7 +45,9 @@ def q2_min_cost_supplier(spark: SparkSession, sf: str) -> DataFrame:
     r = load_table(spark, sf, "region")
 
     region_supp = (
+        # bcast: DIM nation, 25 rows
         s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        # bcast: DIM region slice, <= 5 rows
         .join(F.broadcast(r.filter(F.col("r_name") == "REGION_1")),
               F.col("n_regionkey") == F.col("r_regionkey"))
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
@@ -113,6 +115,7 @@ def q9_product_type_profit(spark: SparkSession, sf: str) -> DataFrame:
         .join(ps, (li.l_partkey == ps.ps_partkey) & (li.l_suppkey == ps.ps_suppkey))
         .join(s.select("s_suppkey", "s_nationkey"),
               li.l_suppkey == F.col("s_suppkey"))
+        # bcast: DIM nation, 25 rows
         .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
         .join(o.select("o_orderkey", "o_orderdate"),
               li.l_orderkey == F.col("o_orderkey"))
@@ -214,6 +217,7 @@ def q20_potential_promotion(spark: SparkSession, sf: str) -> DataFrame:
         .distinct()
     )
     return (
+        # bcast: DIM nation slice, 1 row
         s.join(F.broadcast(n.filter(F.col("n_name") == "NATION_3")),
                s.s_nationkey == F.col("n_nationkey"))
         .join(qualifying, s.s_suppkey == F.col("ps_suppkey"), "left_semi")

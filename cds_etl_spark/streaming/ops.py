@@ -221,6 +221,7 @@ def enrich_stream(
     side never shuffles for this join, which is the only formulation
     that holds up (shuffling a stream on a dimension key re-keys every
     micro-batch)."""
+    # bcast: DIM static dimension side of a stream-static join (the caller's reference table)
     return events.join(F.broadcast(dim), on, how)
 
 
@@ -775,6 +776,7 @@ def stream_cusum_monitor(
         # explicitly (status='bad_sigma') rather than relying on a
         # NULL-divide quietly coalescing to a 0 increment.
         z = cur.join(
+            # bcast: BOUNDED persisted reference moments: one row per monitored group
             F.broadcast(base.select("grp", "mu", "sigma")),
             "grp",
             "left",

@@ -9,6 +9,7 @@ vacuum removes exactly the unreferenced files.
 import pytest
 
 from cds_etl_spark.sources.commitlog import (
+    _read_manifest,
     commit_append,
     commit_overwrite,
     compact_snapshot,
@@ -75,11 +76,13 @@ def test_compact_snapshot_same_rows_fewer_files(spark, tmp_path):
     for i in range(4):
         commit_append(_df(spark, i * 10, i * 10 + 10).repartition(4), t)
     before = read_snapshot(spark, t)
-    assert before.rdd.getNumPartitions() >= 8
+    # Compaction reduces the snapshot's data files, so count those in
+    # the manifest (read partitions follow split packing, i.e. cores).
+    assert len(_read_manifest(spark, t, latest_version(spark, t))["files"]) >= 4
     v = compact_snapshot(spark, t)
     after = read_snapshot(spark, t, v)
     assert _ks(after) == _ks(before) == list(range(40))
-    assert after.rdd.getNumPartitions() == 1  # tiny table -> one file
+    assert len(_read_manifest(spark, t, v)["files"]) == 1  # tiny table
     # Old pre-compaction version still reads.
     assert _ks(read_snapshot(spark, t, v - 1)) == list(range(40))
 

@@ -1,71 +1,45 @@
-"""Window-cliff allowlist gate (r10, verdict task 6).
+"""Window-cliff tags, checked per property.
 
-``tools/window_audit.py`` mechanically lists every global
-``Window.orderBy`` and every low-cardinality
-``partitionBy(...).orderBy`` site in the plan files — the shapes that
-put a corpus-sized row set into one task. The r9 audit classified all
-of them (five corpus-scaling cliffs were rewired with 2.5–8.9× sf10
-wins); this test makes that discipline permanent: a NEW site must be
-added to ``tests/golden/window_sites.txt`` with a class + note
-(GRID / EPILOGUE / HIGH-CARD = safe; REJECT = measured reject recorded
-in BASELINE.md), and a REMOVED site must be deleted from it — both
-directions fail loudly instead of rotting.
+Each global ``Window.orderBy`` and low-cardinality
+``partitionBy(...).orderBy`` site under ``cds_etl_spark/`` carries a
+``# window: <CLASS> <note>`` tag (convention and classes:
+``tests/test_site_tags.py``). ``test_every_site_is_tagged`` there gates
+all sites at once; these tests report each fault kind on its own. The
+tags replaced a golden allowlist file, whose test names are kept.
 """
 
 from __future__ import annotations
 
-import os
-import sys
-
-HERE = os.path.dirname(os.path.abspath(__file__))
-ROOT = os.path.dirname(HERE)
-sys.path.insert(0, os.path.join(ROOT, "tools"))
-
-from window_audit import find_sites, site_key  # noqa: E402
-
-GOLDEN = os.path.join(HERE, "golden", "window_sites.txt")
-ALLOWED_CLASSES = {"GRID", "EPILOGUE", "HIGH-CARD", "REJECT", "REWIRED"}
+from tests.test_site_tags import WINDOW_CLASSES, tree_sites
 
 
-def _golden() -> dict[str, tuple[str, str]]:
-    out: dict[str, tuple[str, str]] = {}
-    for line in open(GOLDEN):
-        line = line.rstrip("\n")
-        if not line or line.startswith("#"):
-            continue
-        kind, rel, name, frag, cls, note = line.split("|", 5)
-        out[f"{kind}|{rel}|{name}|{frag}"] = (cls, note)
-    return out
+def _sites() -> list[tuple[str, str, tuple[str, str] | None]]:
+    return [(at, line, tag) for kind, at, line, tag in tree_sites() if kind == "window"]
 
 
 def test_every_window_site_is_classified():
-    golden = _golden()
-    found = {site_key(h): h for h in find_sites(ROOT)}
-
-    unclassified = sorted(set(found) - set(golden))
-    assert not unclassified, (
-        "New Window-cliff candidate site(s) — classify each in "
-        f"{GOLDEN} (class|note; REJECT needs a BASELINE.md "
-        f"measurement):\n" + "\n".join(unclassified)
-    )
-
-    stale = sorted(set(golden) - set(found))
-    assert not stale, (
-        f"Stale allowlist entr{'y' if len(stale) == 1 else 'ies'} in "
-        f"{GOLDEN} — the site(s) no longer exist; delete the line(s):"
-        "\n" + "\n".join(stale)
+    sites = _sites()
+    assert sites
+    untagged = [f"{at}: {line}" for at, line, tag in sites if tag is None]
+    assert not untagged, (
+        "Window-cliff candidate site(s) without a `# window: <CLASS> <note>` "
+        "tag (REJECT needs a BASELINE.md measurement):\n" + "\n".join(untagged)
     )
 
 
 def test_golden_classes_are_valid():
     bad = {
-        key: cls
-        for key, (cls, _n) in _golden().items()
-        if cls not in ALLOWED_CLASSES
+        at: tag[0]
+        for at, _l, tag in _sites()
+        if tag and tag[0] not in WINDOW_CLASSES
     }
     assert not bad, f"unknown classification class(es): {bad}"
 
 
 def test_golden_notes_nonempty():
-    empty = [k for k, (_c, note) in _golden().items() if not note.strip()]
+    empty = [at for at, _l, tag in _sites() if tag and not tag[1].strip()]
     assert not empty, f"classification note required: {empty}"
+    unmeasured = [
+        at for at, _l, tag in _sites() if tag and tag[0] == "REJECT" and "measured" not in tag[1]
+    ]
+    assert not unmeasured, f"REJECT note must cite its measurement: {unmeasured}"
