@@ -4,6 +4,7 @@ from cds_etl_spark.operators.projection import (
     extract_node,
     extract_raw_data_dict,
     match_col,
+    non_null_counts,
     with_row_id,
 )
 from cds_etl_spark.operators.keys import add_secondary_id, combine_columns, synthetic_file_id
@@ -25,6 +26,7 @@ __all__ = [
     "match_col",
     "extract_raw_data_dict",
     "extract_node",
+    "non_null_counts",
     "combine_columns",
     "add_secondary_id",
     "synthetic_file_id",

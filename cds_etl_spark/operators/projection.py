@@ -11,9 +11,11 @@ phases (cds-transformation_v1.3.py):
     dictionary, skipping all-null sources, and stamp a `type` column.
 
 Spark re-expression: the projection is a single `select` of aliased
-columns (column pruning reaches the scan); the all-null guards are one
-aggregate pass computing every candidate column's non-null count at
-once (the reference scans per column).
+columns (column pruning reaches the scan); the all-null guards read
+non-null counts from one aggregate pass per source frame
+(`non_null_counts`, the reference scans per column). The caller runs
+that pass once over every raw-dictionary column of the frame and hands
+the counts to each node's `extract_node`.
 
 `with_row_id` pins the reference's implicit row identity: several ops
 (O10 external_node, O11, O12-v1.3) copy columns *by row position*
@@ -27,6 +29,7 @@ break at scale; this formulation does not).
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from difflib import SequenceMatcher
 
 from pyspark.sql import DataFrame
@@ -66,8 +69,10 @@ def match_col(columns: list[str], prop: str, limit: float) -> str | None:
     return best
 
 
-def _non_null_counts(df: DataFrame, columns: list[str]) -> dict[str, int]:
-    """One aggregate pass → non-null count per column."""
+def non_null_counts(df: DataFrame, columns: Iterable[str]) -> dict[str, int]:
+    """One aggregate pass → non-null count per column of `df` among
+    `columns` (names `df` lacks are skipped; no job when none remain)."""
+    columns = sorted({c for c in columns if c in df.columns})
     if not columns:
         return {}
     row = df.agg(
@@ -96,7 +101,7 @@ def extract_raw_data_dict(
         col = match_col([c for c in df.columns if c != ROW_ID], prop, limit)
         if col is not None:
             candidates[col] = prop
-    counts = _non_null_counts(df, list(candidates))
+    counts = non_null_counts(df, candidates)
     for col, prop in candidates.items():
         if counts.get(col, 0) > 0:
             raw_dict.setdefault(node, {})[col] = prop
@@ -108,6 +113,7 @@ def extract_node(
     model: Model,
     node: str,
     raw_dict: dict[str, dict[str, str]],
+    counts: dict[str, int],
     keep_row_id: bool = True,
 ) -> DataFrame:
     """Project raw columns into model property names for one node and
@@ -117,15 +123,16 @@ def extract_node(
     For each property, candidate raw columns come from the dictionary;
     the first candidate with any non-null data wins (reference
     `match_col_from_raw_dict` :53-66 iterates candidates in dict order
-    with an all-null guard). All candidates' null-counts are computed
-    in one aggregate pass.
+    with an all-null guard). `counts` is `non_null_counts` of `df` over
+    (at least) this node's dictionary columns, computed once by the
+    caller for every node projected from the same frame; no Spark job
+    runs here.
     """
     mapping = raw_dict.get(node, {})
     by_prop: dict[str, list[str]] = {}
     for col, prop in mapping.items():
         if col in df.columns:
             by_prop.setdefault(prop, []).append(col)
-    counts = _non_null_counts(df, sorted({c for cols in by_prop.values() for c in cols}))
 
     select_exprs = []
     for prop in model.nodes[node]:

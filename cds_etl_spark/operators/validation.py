@@ -86,10 +86,10 @@ def cascade_delete(
     a bounded loop of broadcast anti-join stages — one shuffle-free
     pass per DAG level, not a row-at-a-time recursion."""
     tables = dict(tables)
+    # `bad_ids` is already cut by the caller (id_validation's verdict)
+    # or a filter over an already-cut child table (the recursion).
     # bcast: BOUNDED validation failure-id list; reference ETL tables are catalog-scale
-    bad = F.broadcast(
-        _materialize(bad_ids.select(F.col(bad_ids.columns[0]).alias("_bad_id")).distinct())
-    )
+    bad = F.broadcast(bad_ids.select(F.col(bad_ids.columns[0]).alias("_bad_id")).distinct())
     for rule in parent_mapping:
         if rule["parent_node"] != parent_node:
             continue
@@ -135,6 +135,25 @@ def id_validation(
     """Duplicate-ID/conflict detection + orphan detection + cascades
     (reference `id_validation`, :209-281).
 
+    Per node, after the full-row dedup (:218-219), ONE `groupBy(id)`
+    aggregate gives every id its verdict:
+      * `_orphan` — AND over parent FKs of `max(fk IS NULL)`: the
+        reference's id-level intersection (:222-246);
+      * `_dup` — `count > 1`;
+      * `_conf` — the data columns with more than one distinct value,
+        NULLs counting as one value (:259);
+      * `_bad` — `_dup AND NOT _orphan AND NOT` the many_to_many
+        exemption (:247-277).
+    The `_orphan OR _bad` rows are cut once; if any exist, one anti-join
+    and one `cascade_delete` remove them. Both reports filter the verdict.
+
+    This equals the reference's two passes (orphans, then duplicates
+    among the rest): orphan removal is by id and touches only this
+    node's orphan ids, so every other id's conflict diagnosis sees the
+    same rows; and FK nulling is monotone, so one cascade over
+    orphan ∪ bad drops what two cascades in a row drop. An id that is
+    both an orphan and a conflicting duplicate is an orphan only.
+
     Returns (cleaned tables, id_report, parent_report); reports match
     the reference's TSV schemas (:210-211) with the conflict-column
     list rendered as its Python repr."""
@@ -162,89 +181,64 @@ def id_validation(
         }
         has_m2m = "many_to_many" in node_muls
 
-        # ---- orphan detection (:222-246): ids whose EVERY parent-FK
-        # column has a null occurrence (id-level intersection, :238).
-        if fk_cols:
-            orphan = None
-            for fk in fk_cols:
-                ids_fk = df.filter(_bt(fk).isNull()).select(_bt(id_col).alias("_oid")).distinct()
-                orphan = ids_fk if orphan is None else orphan.intersect(ids_fk)
-            orphan = _materialize(orphan)
-            # The reference triggers the cascade only for a NON-empty
-            # delete list (:244); an unconditional call would still drop
-            # all-null-FK descendants (delete_children's dropna :193),
-            # deleting orphans before their own node's check reports them.
-            if not orphan.isEmpty():
-                df = _materialize(
-                    # bcast: BOUNDED orphan-id failure list; reference ETL tables are catalog-scale
-                    df.join(F.broadcast(orphan), _bt(id_col) == F.col("_oid"), "left_anti")
+        conf = F.filter(
+            F.array(
+                *[F.when(_distinct_incl_null(c) > 1, F.lit(c)) for c in df.columns if c != id_col]
+            ),
+            lambda x: x.isNotNull(),
+        )
+        orphan = (
+            reduce(lambda a, b: a & b, [F.max(_bt(fk).isNull()) for fk in fk_cols])
+            if fk_cols
+            else F.lit(False)
+        )
+        verdict = df.groupBy(_bt(id_col).alias("_vid")).agg(
+            (F.count(F.lit(1)) > 1).alias("_dup"), conf.alias("_conf"), orphan.alias("_orphan")
+        )
+        # many_to_many exemption (:264): sole conflict is a parent FK
+        # column (not one of the node's own model properties).
+        own_props = list(model.nodes.get(node, []))
+        exempt = (
+            (F.size(F.col("_conf")) == 1)
+            & ~F.element_at(F.col("_conf"), 1).isin(own_props)
+            if has_m2m
+            else F.lit(False)
+        )
+        bad = F.col("_dup") & ~F.col("_orphan") & ~exempt
+        verdict = _materialize(verdict.withColumn("_bad", bad).filter("_orphan OR _bad"))
+        # The reference cascades only for a NON-empty delete list
+        # (:244, :271); an unconditional call would still drop
+        # all-null-FK descendants (delete_children's dropna :193).
+        if not verdict.isEmpty():
+            df = _materialize(
+                df.join(
+                    # bcast: BOUNDED orphan/duplicate-id failure list; reference ETL tables are catalog-scale
+                    F.broadcast(verdict.select("_vid")), _bt(id_col) == F.col("_vid"), "left_anti"
                 )
-                tables[node] = df
-                tables = cascade_delete(tables, parent_mapping, node_id_field, orphan, node)
-                df = tables[node]
+            )
+            tables[node] = df
+            tables = cascade_delete(
+                tables, parent_mapping, node_id_field, verdict.select("_vid"), node
+            )
+        if fk_cols:
             parent_reports.append(
-                orphan.select(
+                verdict.filter("_orphan").select(
                     F.lit(node).alias("node name"),
-                    F.col("_oid").cast("string").alias("ID"),
+                    F.col("_vid").cast("string").alias("ID"),
                     F.lit(fk_cols[-1]).alias("parent ID field"),
                 )
             )
-
-        # ---- duplicate-id + conflict diagnosis (:247-277).
-        data_cols = [c for c in df.columns if c != id_col]
-        if data_cols:
-            agg = df.groupBy(_bt(id_col).alias("_vid")).agg(
-                F.count(F.lit(1)).alias("_n"),
-                *[_distinct_incl_null(c).alias(f"_d{i}") for i, c in enumerate(data_cols)],
-            )
-            dups = agg.filter(F.col("_n") > 1)
-            conflicts = F.filter(
-                F.array(
-                    *[
-                        F.when(F.col(f"_d{i}") > 1, F.lit(c)).otherwise(F.lit(None))
-                        for i, c in enumerate(data_cols)
-                    ]
+        # Rows that differ after the full-row dedup differ in some
+        # column, so a duplicate's conflict list is never empty.
+        id_reports.append(
+            verdict.filter("_bad").select(
+                F.lit(node).alias("node name"),
+                F.col("_vid").cast("string").alias("ID"),
+                F.concat(F.lit("['"), F.array_join("_conf", "', '"), F.lit("']")).alias(
+                    "conflict property"
                 ),
-                lambda x: x.isNotNull(),
             )
-            dups = dups.select("_vid", conflicts.alias("_conf"))
-            # many_to_many exemption (:264): sole conflict is a parent
-            # FK column (not one of the node's own model properties).
-            own_props = list(model.nodes.get(node, []))
-            exempt = (
-                (F.size(F.col("_conf")) == 1)
-                & ~F.element_at(F.col("_conf"), 1).isin(own_props)
-                if has_m2m
-                else F.lit(False)
-            )
-            bad = _materialize(dups.filter(~exempt))
-            if not bad.isEmpty():  # same non-empty guard as :271
-                df = _materialize(
-                    df.join(
-                        # bcast: BOUNDED duplicate-id failure list; reference ETL tables are catalog-scale
-                        F.broadcast(bad.select("_vid")), _bt(id_col) == F.col("_vid"), "left_anti"
-                    )
-                )
-                tables[node] = df
-                tables = cascade_delete(
-                    tables, parent_mapping, node_id_field, bad.select("_vid"), node
-                )
-            id_reports.append(
-                bad.select(
-                    F.lit(node).alias("node name"),
-                    F.col("_vid").cast("string").alias("ID"),
-                    F.concat(
-                        F.lit("["),
-                        F.array_join(
-                            F.transform(
-                                F.col("_conf"), lambda x: F.concat(F.lit("'"), x, F.lit("'"))
-                            ),
-                            ", ",
-                        ),
-                        F.lit("]"),
-                    ).alias("conflict property"),
-                )
-            )
+        )
 
     empty_id = spark.createDataFrame([], "`node name` string, ID string, `conflict property` string")
     empty_parent = spark.createDataFrame([], "`node name` string, ID string, `parent ID field` string")

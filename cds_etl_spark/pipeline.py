@@ -8,10 +8,13 @@ Stage order matches the reference exactly:
     UI validation → SSN scan → ID validation (incl. cascade delete) →
     historical state → TSV sinks.
 
-Every stage is a pure NodeTables → NodeTables transform from
-`operators/`; nothing materializes until the sinks (or a validation
-report) run, so Catalyst sees the whole per-node program and prunes
-columns all the way back to the ingest scan.
+Every stage is a NodeTables → NodeTables transform from `operators/`,
+lazy up to ID validation, so Catalyst sees the whole per-node program
+and prunes columns back to the ingest scan. Before the sinks, Spark
+runs one null-count pass over the source scan (the projection's
+all-null guards) and ID validation, which cuts lineage at its stages.
+The source scan is cached so row ids hold while the outputs are
+written; the caller unpersists `PipelineResult.source` afterwards.
 """
 
 from __future__ import annotations
@@ -32,6 +35,7 @@ from cds_etl_spark.operators import (
     extract_node,
     extract_parent_property,
     id_validation,
+    non_null_counts,
     normalize_strings,
     remove_nodes,
     ssn_validation,
@@ -46,6 +50,7 @@ NodeTables = dict[str, DataFrame]
 @dataclass
 class PipelineResult:
     tables: NodeTables
+    source: DataFrame  # the cached, row-id-stamped scan the tables derive from
     id_report: DataFrame | None = None
     parent_report: DataFrame | None = None
     ssn_report: DataFrame | None = None
@@ -72,9 +77,13 @@ class CdsPipeline:
         # Cached: row ids must not change across downstream recomputes.
         src = with_row_id(normalize_strings(metadata)).cache()
 
-        # O6 schema-mapping projection per node.
+        # O6 schema-mapping projection per node; one null-count pass
+        # over every dictionary column serves all nodes' guards.
+        counts = non_null_counts(
+            src, [c for node in self.model.nodes for c in self.raw_dict.get(node, {})]
+        )
         tables: NodeTables = {
-            node: extract_node(src, self.model, node, self.raw_dict)
+            node: extract_node(src, self.model, node, self.raw_dict, counts)
             for node in self.model.nodes
         }
         tables = add_secondary_id(tables, cfg.get("SECONDARY_ID_COLUMN", []))  # O11
@@ -104,4 +113,4 @@ class CdsPipeline:
             self.model,
             raw_data_name,
         )
-        return PipelineResult(tables, id_report, parent_report, ssn_report, ui_report)
+        return PipelineResult(tables, src, id_report, parent_report, ssn_report, ui_report)

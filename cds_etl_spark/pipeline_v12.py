@@ -57,6 +57,7 @@ from cds_etl_spark.operators import (
     clean_data,
     drop_internal,
     extract_node,
+    non_null_counts,
     normalize_strings,
     with_row_id,
 )
@@ -129,11 +130,12 @@ class CdsPipelineV12:
         self._cached.extend(src.values())
 
         # O6 projection, sheet-scoped (v1.3 projects one denormalized
-        # scan; v1.2 has one sheet per node).
+        # scan; v1.2 has one sheet per node): one null-count pass per sheet.
         tables: NodeTables = {}
         for sheet, node in SHEET_NODES.items():
             if sheet in src:
-                tables[node] = extract_node(src[sheet], self.model, node, self.raw_dict)
+                counts = non_null_counts(src[sheet], self.raw_dict.get(node, {}))
+                tables[node] = extract_node(src[sheet], self.model, node, self.raw_dict, counts)
 
         # file_id fallback (:66-73): GUID/guid column from the raw
         # sheet, else a synthetic id. The raw GUID rides the row id.

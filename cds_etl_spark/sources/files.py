@@ -1,12 +1,11 @@
 """File sources/sinks (O30/O31/O32).
 
-* `write_node_tsv` — the reference's per-node TSV sink
-  (`print_data`, cds_transformation_functions.py:106-122): one
-  tab-separated file per node, header row, all-null frames skipped.
-  `single_file=True` reproduces the reference's one-file-per-node
-  contract via coalesce(1) (fine for metadata-scale nodes); the
-  default leaves one file per partition — the scale path.
-* `write_report_tsv` — validation report sink (:197-207).
+* `write_tsv_file` — the reference's per-node TSV sink and validation
+  report sink (`print_data`, cds_transformation_functions.py:106-122,
+  :197-207): one flat tab-separated file with a header row; frames
+  without a single non-null cell are skipped. The emptiness check rides
+  the write job itself as a `DataFrame.observe` metric, so no probe job
+  runs before the write.
 * S3: the reference shuttles files with boto3 (:82-104, :346-360).
   Spark-native equivalent is the same writer pointed at an
   `s3a://bucket/prefix` URI (Hadoop S3A committer handles multipart
@@ -16,8 +15,9 @@
 from __future__ import annotations
 
 import os
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -28,62 +28,28 @@ def read_tsv(spark: SparkSession, path: str, schema=None) -> DataFrame:
     return reader.csv(path)
 
 
-def _has_data(df: DataFrame) -> bool:
-    """Reference guard: skip frames with no non-all-null row
-    (:119-120). A row-limit probe, not a full count. Explicit
-    backticked predicate instead of dropna: column names may contain
-    dots (parent-FK columns like ``study.phs_accession``), which
-    dropna's unescaped resolution breaks on."""
-    from functools import reduce
-
-    any_set = reduce(
-        lambda a, b: a | b, [F.col(f"`{c}`").isNotNull() for c in df.columns]
-    )
-    return len(df.where(any_set).limit(1).take(1)) > 0
-
-
-def write_node_tsv(
-    df: DataFrame, out_dir: str, name: str, prefix: str = "", single_file: bool = True
-) -> str | None:
-    if not _has_data(df):
-        return None
-    file_base = f"{prefix}-{name}" if prefix else name
-    path = os.path.join(out_dir, file_base)
-    out = df.coalesce(1) if single_file else df
-    (
-        out.write.mode("overwrite")
-        .option("sep", "\t")
-        .option("header", True)
-        .option("emptyValue", "")
-        .option("nullValue", "")
-        .csv(path)
-    )
-    return path
-
-
-def write_report_tsv(df: DataFrame, out_dir: str, name: str, prefix: str = "") -> str | None:
-    if df.isEmpty():
-        return None
-    return write_node_tsv(df, out_dir, name, prefix)
-
-
 def write_tsv_file(df: DataFrame, out_dir: str, name: str, prefix: str = "") -> str | None:
     """Reference `print_data` file contract: ONE flat
     ``<prefix>-<name>.tsv`` (cds_transformation_functions.py:106-122),
-    not a part-file directory. The frame is written through the normal
-    csv sink into a hidden temp dir, then the single part file is
-    promoted with a filesystem rename — scheme-agnostic (file://,
-    s3a://, ...) and metadata-only on posix filesystems. Edge sink for
-    metadata-scale nodes; the scale path stays `write_node_tsv`
-    (one file per partition)."""
-    if not _has_data(df):
-        return None
+    not a part-file directory, and nothing at all for a frame with no
+    row holding a non-null value (:119-120). The frame is written
+    through the normal csv sink into a hidden temp dir while an
+    observation counts its rows with any non-null cell; a zero count
+    deletes the temp dir and returns None, otherwise the single part
+    file is promoted with a filesystem rename — scheme-agnostic
+    (file://, s3a://, ...) and metadata-only on posix filesystems.
+    Edge sink for metadata-scale nodes (coalesce(1)). The predicate is
+    explicit and backticked: column names may contain dots (parent-FK
+    columns like ``study.phs_accession``)."""
     from cds_etl_spark.sources.transfer import _fs_and_path
 
     file_base = f"{prefix}-{name}" if prefix else name
     tmp = os.path.join(out_dir, f".{file_base}.tmp")
+    any_set = reduce(lambda a, b: a | b, [F.col(f"`{c}`").isNotNull() for c in df.columns])
+    seen = Observation()
     (
-        df.coalesce(1)
+        df.observe(seen, F.count_if(any_set).alias("rows"))
+        .coalesce(1)
         .write.mode("overwrite")
         .option("sep", "\t")
         .option("header", True)
@@ -93,6 +59,9 @@ def write_tsv_file(df: DataFrame, out_dir: str, name: str, prefix: str = "") -> 
     )
     spark = df.sparkSession
     fs, tmp_path = _fs_and_path(spark, tmp)
+    if seen.get["rows"] == 0:
+        fs.delete(tmp_path, True)
+        return None
     parts = [
         st.getPath()
         for st in fs.listStatus(tmp_path)

@@ -135,6 +135,25 @@ def test_transform_mode_writes_flat_tsvs_and_reports(workdir, spark):
     assert any("123-45-6789" in r["File_Name"] for r in ssn)
 
 
+def test_transform_releases_its_source_cache(workdir, spark, monkeypatch):
+    """The v1.3 transform caches each file's source scan (row ids must
+    stay fixed while the outputs are written) and releases it after the
+    last write: no cache entry of its own outlives the run."""
+    from pyspark import StorageLevel
+
+    cls = type(spark.range(1))
+    cached = []
+    for name in ("cache", "persist"):
+        def spy(self, *args, _orig=getattr(cls, name), **kwargs):
+            cached.append(self)
+            return _orig(self, *args, **kwargs)
+
+        monkeypatch.setattr(cls, name, spy)
+    assert main(["--config_file", str(workdir / "config.yaml")], spark=spark) == 0
+    assert cached
+    assert [df.storageLevel for df in cached] == [StorageLevel.NONE] * len(cached)
+
+
 def test_historical_accumulation_across_runs(workdir, spark):
     cfg = ["--config_file", str(workdir / "config.yaml")]
     assert main(cfg, spark=spark) == 0

@@ -132,6 +132,12 @@ ROWS = [
     # r7: orphan participant P5 (blank study id, O3 → null FK → O23)
     ("   ", "StudyA", "Genomic", "2", "P5", "Male", "S6", "Tumor",
      "F6", "f6.bam", "BAM", 600.0, "WGS", 6000.0, "Rx"),
+    # r8a/r8b: participant P6 is an orphan (blank study id) AND a
+    # conflicting duplicate (gender) → reported as an orphan only (O23)
+    ("   ", "StudyA", "Genomic", "2", "P6", "Male", "S7", "Tumor",
+     "F7", "f7.bam", "BAM", 700.0, "WGS", 7000.0, "Rx"),
+    ("   ", "StudyA", "Genomic", "2", "P6", "Female", "S7", "Tumor",
+     "F7", "f7.bam", "BAM", 700.0, "WGS", 7000.0, "Rx"),
 ]
 
 
@@ -171,7 +177,7 @@ def test_study_combined(result):
 def test_participant_outcomes(result):
     df = result.tables["participant"]
     by_id = {r["participant_id"]: r.asDict() for r in df.collect()}
-    # P3 conflict-deleted, P5 orphan-deleted
+    # P3 conflict-deleted, P5 and P6 orphan-deleted
     assert set(by_id) == {"P1", "P2", "P4"}
     # enum synonym cleaned after trim (O4+O19)
     assert by_id["P2"]["gender"] == "Female"
@@ -184,7 +190,7 @@ def test_sample_combined_key_and_cascade(result):
     df = result.tables["sample"]
     ids = {r["sample_id"] for r in df.collect()}
     # combined key uses RAW sample_type (combine happens before clean);
-    # S3 cascade-deleted with P3, S6 with P5
+    # S3 cascade-deleted with P3, S6 with P5, S7 with P6
     assert ids == {"S1_Tumor", "S2_normal", "S4_Tumor", "S5_Tumor"}
     by_id = {r["sample_id"]: r.asDict() for r in df.collect()}
     # but the sample_type VALUE is cleaned (O19 after O10)
@@ -195,7 +201,7 @@ def test_file_m2m_exemption_and_cascade(result):
     df = result.tables["file"]
     rows = [r.asDict() for r in df.collect()]
     ids = {r["file_id"] for r in rows}
-    assert ids == {"F1", "F2", "F4"}  # F3, F6 cascade-deleted
+    assert ids == {"F1", "F2", "F4"}  # F3, F6, F7 cascade-deleted
     # F4 kept twice (one per sample edge) — many_to_many exemption
     f4 = [r for r in rows if r["file_id"] == "F4"]
     assert len(f4) == 2
@@ -232,3 +238,16 @@ def test_reports(result):
     )
     ui = [r.asDict() for r in result.ui_report.collect()]
     assert any(r["Missing_Properties"] == "participant.ethnicity" for r in ui)
+
+
+def test_orphan_that_is_also_a_conflicting_duplicate(result):
+    """An id that is both an orphan and a conflicting duplicate is
+    decided once: it is an orphan (Parent report), not an ID-report
+    conflict, and its descendants cascade away."""
+    parent = {(r["node name"], r["ID"]) for r in result.parent_report.collect()}
+    assert ("participant", "P6") in parent
+    assert not any(r["ID"] == "P6" for r in result.id_report.collect())
+    assert "P6" not in {r["participant_id"] for r in result.tables["participant"].collect()}
+    assert "S7_Tumor" not in {r["sample_id"] for r in result.tables["sample"].collect()}
+    assert "F7" not in {r["file_id"] for r in result.tables["file"].collect()}
+    assert "F7" not in {r["library_id"] for r in result.tables["genomic_info"].collect()}

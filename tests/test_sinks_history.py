@@ -2,7 +2,7 @@
 all-null skip guard, and idempotent history merge/re-stamp."""
 
 from cds_etl_spark.operators.history import add_historical_value, stamp_historical_value
-from cds_etl_spark.sources.files import read_tsv, write_node_tsv, write_report_tsv
+from cds_etl_spark.sources.files import read_tsv, write_tsv_file
 
 
 def test_tsv_roundtrip_and_null_skip(spark, tmp_path):
@@ -10,15 +10,20 @@ def test_tsv_roundtrip_and_null_skip(spark, tmp_path):
         [("phs001", "StudyA", None), ("phs002", None, "v2")],
         "phs_accession string, study_name string, study_version string",
     )
-    path = write_node_tsv(df, str(tmp_path), "study", prefix="batch1")
-    assert path and path.endswith("batch1-study")
+    path = write_tsv_file(df, str(tmp_path), "study", prefix="batch1")
+    assert path == str(tmp_path / "batch1-study.tsv")
+    assert not (tmp_path / ".batch1-study.tmp").exists()
     back = read_tsv(spark, path, schema=df.schema)
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
 
-    # All-null frame → skipped, like the reference's print_data guard.
-    empty = spark.createDataFrame([(None, None)], "a string, b string")
-    assert write_node_tsv(empty, str(tmp_path), "empty") is None
-    assert write_report_tsv(empty.limit(0), str(tmp_path), "report") is None
+    # An all-null frame and a zero-row frame are skipped, like the
+    # reference's print_data guard: no file and no temp dir remain.
+    # The dotted name is a parent-FK column shape (`study.phs_accession`).
+    all_null = spark.createDataFrame([(None, None)], "a string, `b.c` string")
+    for name, frame in (("all_null", all_null), ("no_rows", all_null.limit(0))):
+        assert write_tsv_file(frame, str(tmp_path), name) is None
+        assert not (tmp_path / f"{name}.tsv").exists()
+        assert not (tmp_path / f".{name}.tmp").exists()
 
 
 def test_history_merge_and_stamp(spark, tmp_path):
